@@ -19,8 +19,10 @@ adjudicating a uniform environment/data-generation shift (e.g. a testdata
 regeneration that slowed every untouched query ~1.5x): pass the median
 like-for-like ratio and only queries moving BEYOND the global factor
 remain flagged. --factor auto computes that median from the shared
-queries. Exits 1 on any regression so precommit-style wiring can gate on
-it; 2 on incomparable inputs.
+queries. Exits 1 on any regression, or when the new side names any
+failed query (a query that threw has no time and must not pass as a
+fast one), so precommit-style wiring can gate on it; 2 on incomparable
+inputs.
 """
 import argparse
 import json
@@ -103,8 +105,10 @@ def load(path):
     m = re.search(r'"sf":"([^"]+)"', tail)
     if m:
         sf = m.group(1)
+    m = re.findall(r'"failed":\[([^\]]*)\]', tail)
+    failed = re.findall(r'"([^"]+)"', m[-1]) if m else []
     return {"queries": qs, "variance": {}, "value": val, "sf": sf,
-            "partial": True}
+            "failed": failed, "partial": True}
 
 
 old = load(args.old)
@@ -224,4 +228,7 @@ if removed and not partial:
     print(f"  removed: {removed}")
 if not regressions and not improvements:
     print("  no per-query moves outside noise ranges")
-sys.exit(1 if regressions else 0)
+failed = new.get("failed") or []
+if failed:
+    print(f"  FAILED on the new side ({len(failed)}): {failed}")
+sys.exit(1 if regressions or failed else 0)

@@ -21,7 +21,9 @@ bench_gate() {
   git show HEAD:BENCH_LOCAL.json > /tmp/bench_committed.json
   local load_before
   load_before=$(cut -d' ' -f1-3 /proc/loadavg)
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  # core count follows the box (an override via SPARK_GRAFT_CPUS still
+  # works); benchdiff refuses a baseline stamped with another count
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
     SPARK_GRAFT_BENCH_OUT=/tmp/bench_fresh.json \
     sbt -batch "runMain graft.Bench" > /tmp/bench_gate.log 2>&1
   # --max-factor bounds the auto strip: a uniform >1.25x move (which the

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -11,7 +11,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // warm up JVM/codegen/parquet-reader paths so the first measured query
     // doesn't absorb session startup cost
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => }
     // ... and the MEASURED execution path itself: entry() is a count(),
     // which skips the noop-sink write path and whole-stage-codegen
     // compilation the loop below exercises, so the first measured keys
@@ -22,7 +22,7 @@ object Bench {
     for (name <- (SparkEntry.queries.keys.toSeq.sorted.take(1) ++
         Seq("q_severity_hourly")).distinct; fn <- SparkEntry.queries.get(name))
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     // min of 2 runs per query, with the rounds INTERLEAVED (all queries
     // once, then all again) rather than back-to-back: consecutive runs of
     // the same query land in the same GC/JIT epoch, so a transient stall
@@ -38,41 +38,32 @@ object Bench {
       .filter { case (n, _) => filters.isEmpty || filters.exists(n.contains) }
     val best = scala.collection.mutable.Map[String, Double]()
     val worst = scala.collection.mutable.Map[String, Double]()
+    val failed = scala.collection.mutable.SortedSet[String]()
     for (_ <- 1 to 2; (name, fn) <- ordered) {
       // memoized derived frames (dedup cluster labels, IVF codebook) are
       // dropped before EVERY measured run: with a warm cache the first
       // cluster-family query benched paid the whole propagation (a 42×
       // variance entry, ~26 s hidden from every per-query min in r6) and
       // the rest read cache — totals depended on alphabetical order
-      graft.operators.Dedup.clearLabelsCache()
-      graft.operators.Dedup.clearGramIndexCache()
-      graft.operators.Dedup.clearSimhashIndexCache()
-      graft.operators.Dedup.clearMinhashIndexCache()
-      graft.operators.Dedup.clearSubstrIndexCache()
-      graft.operators.Dedup.clearWinnowIndexCache()
-      graft.operators.Dedup.clearSubstringSpansCache()
-      graft.operators.TextAnalysis.clearBpeMergeCache()
-      graft.operators.Similarity.clearCodebookCache()
-      graft.operators.Similarity.clearSemanticIndexCache()
-      graft.operators.Resolve.clearLabelsCache()
-      graft.operators.Bucketing.clearTableCache()
-      graft.operators.Relational.clearZOrderCache()
-      graft.operators.Relational.clearTextFormatsCache()
-      graft.operators.SketchTable.clearTableCache()
-      graft.operators.CorpusOps.clearSourceSketchCache()
-      graft.operators.CorpusOps.clearFrontierCache()
+      Memo.clearAll()
       val t0 = System.nanoTime()
-      // noop-sink write, NOT .count(): count(1) lets Catalyst prune every
-      // column the count doesn't need, so projection-only queries (e.g.
-      // q_pii_scrub's three regex passes) measured as metadata-ish scans;
-      // the noop sink evaluates every output column and discards rows
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
-      if (dt > worst.getOrElse(name, Double.MinValue)) worst(name) = dt
+      // a query that throws is a FAILED key, never a fast time: it is
+      // named in `failed`, left out of `total`, and fails benchdiff
+      try {
+        // noop-sink write, NOT .count(): count(1) lets Catalyst prune every
+        // column the count doesn't need, so projection-only queries (e.g.
+        // q_pii_scrub's three regex passes) measured as metadata-ish scans;
+        // the noop sink evaluates every output column and discards rows
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val dt = (System.nanoTime() - t0) / 1e9
+        if (dt < best.getOrElse(name, Double.MaxValue)) best(name) = dt
+        if (dt > worst.getOrElse(name, Double.MinValue)) worst(name) = dt
+      } catch { case NonFatal(e) =>
+        failed += name
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
     }
-    val results = best.toMap
+    val results = best.toMap -- failed
     // ms precision and sorted keys keep the line short and diffable
     // (full-precision doubles made it ~4 KB — long enough to fall off a
     // log tail mid-line and parse as garbage); locale-free formatting via
@@ -92,10 +83,11 @@ object Bench {
     // files whose methods differ (a noop-sink number against a count()
     // number, or a 4-core run against a 32-core one, is not a diff)
     val method = s"noop-sink/cold-caches/min-of-2-interleaved/local[$cpus]"
+    val failedJson = failed.toSeq.map(k => "\"" + k + "\"").mkString("[", ",", "]")
     // cpus is quoted: SPARK_GRAFT_CPUS=* is a valid master setting
     // (local[*]) and a bare * would make the line unparseable JSON
     val localJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"$method","cpus":"$cpus","queries":${jmap(results)},"variance":${jmap(spread)},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","method":"$method","cpus":"$cpus","queries":${jmap(results)},"variance":${jmap(spread)},"failed":$failedJson,"sf":"$sfDir"}"""
     // The driver's artifact keeps only the last 2000 chars of stdout, so
     // the full-precision named map (~5.3 KB at 216 queries) lost its head
     // three rounds running. Per-query times therefore print as a VALUES
@@ -119,7 +111,7 @@ object Bench {
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir"}"""
     // stop FIRST so the JSON lines are the last stdout of the run, with no
     // shutdown logging after them; persist the full data for post-hoc use
-    try spark.stop() catch { case _: Throwable => }
+    try spark.stop() catch { case NonFatal(_) => }
     // default artifact = BENCH_LAST_RUN.json, NOT BENCH_LOCAL.json: the
     // committed baseline (BENCH_LOCAL) is refreshed only through the
     // bench gate (precommit --bench passes SPARK_GRAFT_BENCH_OUT
@@ -132,7 +124,7 @@ object Bench {
       new java.io.File("BENCH_LAST_RUN.json").getAbsolutePath)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (localJson + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] WARN: could not write $outPath: $e — file may be stale")
     }
     // full NAMED per-query map on stdout too (r21 PERF had n_common=0:

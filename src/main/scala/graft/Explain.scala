@@ -1,29 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: print the formatted physical plan of declared queries without
-  * executing them — the `.explain("formatted")` loop the build methodology
-  * calls for, reachable as `sbt "runMain graft.Explain <sfDir> <keySubstring>"`.
-  * Not part of the library surface. */
+import scala.util.control.NonFatal
+
+/** Dev tool: print the formatted physical plan of every declared query
+  * whose key contains any of the given substrings (every key when none
+  * are given) — the `.explain("formatted")` loop the build methodology
+  * calls for. Nothing executes unless the operator itself runs jobs at
+  * build time (index builds, label propagation). Not part of the library
+  * surface.
+  *
+  * Usage: runMain graft.Explain <sfDir> [keySubstring ...]
+  */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
-    val filter = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val (sfDir, filters) = args.toSeq match {
+      case Seq(dir, rest @ _*) => (dir, rest)
+      case _ => sys.error("usage: Explain <sfDir> [keySubstring ...]")
+    }
+    val spark = GraftSession.local(GraftSession.envCores)
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries
-      .filter { case (name, _) => filter.forall(name.contains) }
-      .toSeq.sortBy(_._1)
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => filters.isEmpty || filters.exists(name.contains) }
       .foreach { case (name, fn) =>
         println(s"\n===== $name =====")
         try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"[explain] failed: ${e.getMessage}") }
+        catch { case NonFatal(e) => println(s"[explain] failed: ${e.getMessage}") }
       }
     spark.stop()
   }

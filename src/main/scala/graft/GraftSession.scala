@@ -29,6 +29,10 @@ object GraftSession {
     else withMaster
   }
 
+  /** the dev mains' core count: SPARK_GRAFT_CPUS when set, else the JVM's */
+  def envCores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+
   /** local development/test session: local[n], shuffle partitions = n */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(master = Some(s"local[$cores]"), shufflePartitions = cores)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,16 +11,9 @@ object Verify {
       case Seq(a, b, rest @ _*) => (a, b, rest)
       case _ => sys.error("usage: Verify <sfDir> <outDir> [keySubstring...]")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark cannot read
-      // natively; read as BIGINT ns and truncate to µs in util.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    // local[$cpus], shuffle partitions = cpus, UTC, nanosAsLong (events
+    // carries TIMESTAMP(NANOS) — see util.events)
+    val spark = GraftSession.local(sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

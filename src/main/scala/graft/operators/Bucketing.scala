@@ -28,28 +28,25 @@ object Bucketing {
 
   val NumBuckets = 8
 
-  /** (fingerprint, (ordersTable, customerTable)) memoized per
-    * (session, dir) — the same staleness-guarded pattern as Dedup's label
-    * cache and Similarity's codebook cache: rewritten inputs invalidate. */
+  /** (layout dir, (ordersTable, customerTable)) memoized per
+    * (session, dir), staleness-guarded on both inputs' fingerprints; the
+    * layout dir is deleted on replace/clear like every path memo's. */
   private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, (String, String))]()
+    graft.Memo[(SparkSession, String), (String, (String, String))](
+      v => graft.util.deleteRecursively(v._1))
 
   /** Ensures bucketed twins of `orders` and `customer` exist for `dir`
     * (build-once), returns their catalog table names. External tables
     * under a run-private temp path: the catalog is in-memory per session,
     * so names only need to be unique per (dir) within one JVM. */
   def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    tableCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir, "orders.parquet") + ":" +
-        inputFingerprint(dir, "customer.parquet")
-      val cached = tableCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        val suffix = java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))
-          .toString.replace("-", "").take(8)
-        val base = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-        val names = (s"graft_orders_$suffix", s"graft_customer_$suffix")
+    tableCache.get((s, dir),
+        inputFingerprint(dir, "orders.parquet") + ":" +
+          inputFingerprint(dir, "customer.parquet")) {
+      val suffix = java.util.UUID.nameUUIDFromBytes(dir.getBytes("UTF-8"))
+        .toString.replace("-", "").take(8)
+      val names = (s"graft_orders_$suffix", s"graft_customer_$suffix")
+      val base = graft.Memo.tempDir("graft_bucketed") { base =>
         // repartition on the bucket key first: every task then owns whole
         // buckets, so the write emits ≤ NumBuckets files per table however
         // many input partitions there are (bucketBy alone writes one file
@@ -66,13 +63,12 @@ object Bucketing {
           .bucketBy(NumBuckets, "c_custkey").sortBy("c_custkey")
           .option("path", s"$base/customer")
           .mode("overwrite").saveAsTable(names._2)
-        tableCache.put(key, (fp, names))
-        names
       }
-    }
+      (base, names)
+    }._2
 
-  /** test/teardown hook, mirroring Dedup.clearLabelsCache */
-  def clearTableCache(): Unit = tableCache.synchronized(tableCache.clear())
+  /** test/teardown hook: drops the memo and deletes the bucketed layout */
+  def clearTableCache(): Unit = tableCache.clear()
 
   /** Per-customer order rollup through the CO-LOCATED join: both sides
     * read bucket-aligned on the join key, the merge hint pins the

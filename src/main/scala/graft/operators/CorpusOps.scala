@@ -734,26 +734,13 @@ object CorpusOps {
     * documents fingerprint; Bench clears it so the declared query pays
     * its build honestly under the cold-cache rule */
   private val sourceSketchCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
-  def clearSourceSketchCache(): Unit = sourceSketchCache.synchronized {
-    sourceSketchCache.forEach((_, v) => deleteRecursively(v._2))
-    sourceSketchCache.clear()
-  }
+  def clearSourceSketchCache(): Unit = sourceSketchCache.clear()
 
   private def sourceSketchTable(s: SparkSession, dir: String): String =
-    sourceSketchCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir, "documents.parquet")
-      val c = sourceSketchCache.get(key)
-      if (c != null && c._1 == fp) c._2
-      else {
-        if (c != null) deleteRecursively(c._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_src_sketches").toString
-        writeSourceGramSketches(s, dir, path)
-        sourceSketchCache.put(key, (fp, path))
-        path
-      }
+    sourceSketchCache.get((s, dir), inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_src_sketches")(writeSourceGramSketches(s, dir, _))
     }
 
   /** `q_source_overlap_theta` answered from PERSISTED states only — the
@@ -1132,7 +1119,8 @@ object CorpusOps {
     * SAME rule set as the Spark side, so `q_url_extract_psl` replays
     * the full bundled publicsuffix.org list through DuckDB verbatim
     * (~9.5k rules fold into one CASE with a few IN lists; constant
-    * plan-time, the PslScaleTiming curve) */
+    * plan-time — PERF.md, "Round-17: a 10k-entry PSL catalog is
+    * constant overhead, not per-row work") */
   def urlExtractSqlWith(suffixes: Seq[String]): String =
     s"""WITH $urlifiedCte,
        |x AS (SELECT doc_id, regexp_extract_all(text, '$UrlRe', 0) AS urls FROM u),
@@ -1242,26 +1230,13 @@ object CorpusOps {
   /** frontier memoized per (session, dir) on the documents fingerprint;
     * Bench clears it so the declared query pays its build honestly */
   private val frontierCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
-  def clearFrontierCache(): Unit = frontierCache.synchronized {
-    frontierCache.forEach((_, v) => deleteRecursively(v._2))
-    frontierCache.clear()
-  }
+  def clearFrontierCache(): Unit = frontierCache.clear()
 
   private def frontierPath(s: SparkSession, dir: String): String =
-    frontierCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir, "documents.parquet")
-      val c = frontierCache.get(key)
-      if (c != null && c._1 == fp) c._2
-      else {
-        if (c != null) deleteRecursively(c._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_frontier").toString
-        writeUrlFrontier(s, dir, path)
-        frontierCache.put(key, (fp, path))
-        path
-      }
+    frontierCache.get((s, dir), inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_frontier")(writeUrlFrontier(s, dir, _))
     }
 
   /** Declared incremental form: the batch split's URLs probed against

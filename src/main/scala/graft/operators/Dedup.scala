@@ -563,28 +563,12 @@ object Dedup {
     * invalidates the entry. The cached frame's rounds are already
     * checkpoint-materialized, so reuse is a cheap scan. */
   private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (String, DataFrame, Option[org.apache.spark.rdd.RDD[_]])]()
+    graft.Memo[(SparkSession, String), graft.Memo.Checkpointed](graft.Memo.unpersistCheckpoint)
 
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
-    labelsCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = labelsCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        // a replaced entry's checkpoint blocks are unpersisted here, and
-        // in clearLabelsCache, mirroring Similarity.clearCodebookCache —
-        // otherwise the stale MEMORY_AND_DISK blocks linger until
-        // ContextCleaner GC
-        if (cached != null)
-          cached._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-        val (labels, ckpt) = propagateMinLabelTracked(
-          dedupNgramJaccard(s, dir).select("d1", "d2"))
-        labelsCache.put(key, (fp, labels, ckpt))
-        labels
-      }
-    }
+    labelsCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      propagateMinLabelTracked(dedupNgramJaccard(s, dir).select("d1", "d2"))
+    }._1
 
   /** the persisted block set behind a localCheckpoint'd frame, so rounds
     * a later round has materialized past can be unpersisted explicitly */
@@ -662,16 +646,8 @@ object Dedup {
     (labels, prevCkpt)
   }
 
-  /** unpersist and drop every cached label frame (test/teardown hook;
-    * Bench calls it before each measured run so propagation cost lands
-    * in the query that incurs it, not in whichever cluster-family query
-    * happens to run first) */
-  def clearLabelsCache(): Unit = labelsCache.synchronized {
-    labelsCache.forEach { (_, v) =>
-      v._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-    }
-    labelsCache.clear()
-  }
+  /** unpersist and drop every cached label frame (test/teardown hook) */
+  def clearLabelsCache(): Unit = labelsCache.clear()
 
   def dedupClusters(s: SparkSession, dir: String): DataFrame =
     clusterLabels(s, dir).orderBy("doc_id")
@@ -1721,28 +1697,14 @@ object Dedup {
   /** index path memoized per (session, dir, input fingerprint) — the
     * SimHash twin of [[gramIndexPath]] */
   private val simhashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   def ensureSimhashIndex(s: SparkSession, dir: String): String =
-    simhashIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = simhashIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_simhash_idx").toString
-        writeSimhashIndex(s, dir, path)
-        simhashIndexCache.put(key, (fp, path))
-        path
-      }
+    simhashIndexCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_simhash_idx")(writeSimhashIndex(s, dir, _))
     }
 
-  def clearSimhashIndexCache(): Unit =
-    simhashIndexCache.synchronized {
-      simhashIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      simhashIndexCache.clear()
-    }
+  def clearSimhashIndexCache(): Unit = simhashIndexCache.clear()
 
   // The declared batch query sorts for a stable oracle compare; the probe
   // itself stays unsorted so the streaming foreachBatch sinks don't pay a
@@ -2001,30 +1963,14 @@ object Dedup {
     * staleness guard as the label cache; the index is files on disk, so
     * invalidation just writes a fresh directory */
   private val gramIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   private def gramIndexPath(s: SparkSession, dir: String): String =
-    gramIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = gramIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        // drop the superseded directory — a stale index is a full corpus
-        // gram copy under /tmp, and the bench invalidates per measured run
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_gram_idx").toString
-        writeGramIndex(s, dir, path)
-        gramIndexCache.put(key, (fp, path))
-        path
-      }
+    gramIndexCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_gram_idx")(writeGramIndex(s, dir, _))
     }
 
-  def clearGramIndexCache(): Unit =
-    gramIndexCache.synchronized {
-      gramIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      gramIndexCache.clear()
-    }
+  def clearGramIndexCache(): Unit = gramIndexCache.clear()
 
   /** Probe a persisted gram index with ARBITRARY documents (doc_id,
     * text) — the reusable core: the declared batch query feeds it the
@@ -2283,28 +2229,14 @@ object Dedup {
   }
 
   private val minhashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   def ensureMinhashIndex(s: SparkSession, dir: String): String =
-    minhashIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = minhashIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_minhash_idx").toString
-        writeMinhashIndex(s, dir, path)
-        minhashIndexCache.put(key, (fp, path))
-        path
-      }
+    minhashIndexCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_minhash_idx")(writeMinhashIndex(s, dir, _))
     }
 
-  def clearMinhashIndexCache(): Unit =
-    minhashIndexCache.synchronized {
-      minhashIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      minhashIndexCache.clear()
-    }
+  def clearMinhashIndexCache(): Unit = minhashIndexCache.clear()
 
   // Sorted here, not in the probe — see dedupSimhashIncremental.
   def dedupMinhashIncremental(s: SparkSession, dir: String): DataFrame =
@@ -2560,32 +2492,17 @@ object Dedup {
     * the memo pays. Checkpoint blocks are unpersisted on replace/clear
     * exactly like the labels cache. */
   private val spansCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (String, DataFrame, Option[org.apache.spark.rdd.RDD[_]])]()
+    graft.Memo[(SparkSession, String), graft.Memo.Checkpointed](graft.Memo.unpersistCheckpoint)
 
   private def corpusSubstringSpans(s: SparkSession, dir: String): DataFrame =
-    spansCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = spansCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null)
-          cached._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-        val spans = substringSpansOf(dupSubstrPositionsOf(
-          t(s, dir, "documents").select("doc_id", "text")))
-          .localCheckpoint(false)
-        spansCache.put(key, (fp, spans, checkpointRdd(spans)))
-        spans
-      }
-    }
+    spansCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      val spans = substringSpansOf(dupSubstrPositionsOf(
+        t(s, dir, "documents").select("doc_id", "text")))
+        .localCheckpoint(false)
+      (spans, checkpointRdd(spans))
+    }._1
 
-  def clearSubstringSpansCache(): Unit = spansCache.synchronized {
-    spansCache.forEach { (_, v) =>
-      v._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-    }
-    spansCache.clear()
-  }
+  def clearSubstringSpansCache(): Unit = spansCache.clear()
 
   /** Declared query: merged duplicated spans (doc_id, span_start,
     * span_end), keep-first exemption applied — the removal plan the
@@ -2815,7 +2732,9 @@ object Dedup {
       // (~80x the compressed scan bytes in shuffle form), so leaving the
       // width to the session default put 12x/decade of pure sort/GC
       // pressure on the committed 32-partition bench config while 64-256
-      // partitions sat at the family's 4.5x (tools.SubstrPairsSweep).
+      // partitions sat at the family's 4.5x (PERF.md, "Round-19: the
+      // substring_pairs 13.5x/decade step DEMONSTRATED as partition-
+      // local sort pressure").
       // One partition per 256 KB of scan bytes — a PLAN-TIME statistic,
       // no job — keeps per-partition sorts bounded at any input scale;
       // the session default stays the floor so small inputs are
@@ -3236,28 +3155,14 @@ object Dedup {
   }
 
   private val winnowIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   def ensureWinnowIndex(s: SparkSession, dir: String): String =
-    winnowIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = winnowIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_winnow_idx").toString
-        writeWinnowIndex(s, dir, path)
-        winnowIndexCache.put(key, (fp, path))
-        path
-      }
+    winnowIndexCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_winnow_idx")(writeWinnowIndex(s, dir, _))
     }
 
-  def clearWinnowIndexCache(): Unit =
-    winnowIndexCache.synchronized {
-      winnowIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      winnowIndexCache.clear()
-    }
+  def clearWinnowIndexCache(): Unit = winnowIndexCache.clear()
 
   /** Declared query: the winnowed ingest-time form — batch split probes
     * the persisted winnow index; spans under-cover the exact incremental
@@ -3369,28 +3274,14 @@ object Dedup {
   /** index path memoized per (session, dir, input fingerprint) — the
     * substring twin of [[gramIndexPath]] */
   private val substrIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   def ensureSubstrIndex(s: SparkSession, dir: String): String =
-    substrIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = substrIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_substr_idx").toString
-        writeSubstrIndex(s, dir, path)
-        substrIndexCache.put(key, (fp, path))
-        path
-      }
+    substrIndexCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_substr_idx")(writeSubstrIndex(s, dir, _))
     }
 
-  def clearSubstrIndexCache(): Unit =
-    substrIndexCache.synchronized {
-      substrIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      substrIndexCache.clear()
-    }
+  def clearSubstrIndexCache(): Unit = substrIndexCache.clear()
 
   // The declared batch query sorts for a stable oracle compare; the
   // probe stays unsorted for the streaming sinks (the

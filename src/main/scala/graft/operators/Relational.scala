@@ -40,17 +40,11 @@ object Relational {
     * fingerprint) — the same staleness-guarded cache pattern as the
     * dedup index caches */
   private val textFmtCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   private def ensureTextFormats(s: SparkSession, dir: String): String =
-    textFmtCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet")
-      val cached = textFmtCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_textfmt").toString
+    textFmtCache.get((s, dir), graft.util.inputFingerprint(dir, "documents.parquet")) {
+      graft.Memo.tempDir("graft_textfmt") { path =>
         val docs = t(s, dir, "documents")
           .select("doc_id", "lang", "source", "text")
         docs.write.mode("overwrite").json(s"$path/jsonl")
@@ -68,18 +62,12 @@ object Relational {
         // the other columnar interchange format Spark bundles a native
         // vectorized reader for — covers the binary round-trip too
         docs.write.mode("overwrite").orc(s"$path/orc")
-        textFmtCache.put(key, (fp, path))
-        path
       }
     }
 
   /** cold-cache hook for Bench — the round-trip query must pay its
     * three writes per measured run like every other memoized builder */
-  def clearTextFormatsCache(): Unit =
-    textFmtCache.synchronized {
-      textFmtCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      textFmtCache.clear()
-    }
+  def clearTextFormatsCache(): Unit = textFmtCache.clear()
 
   private val docsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType),
@@ -552,32 +540,19 @@ object Relational {
     * so `q_scan_zorder` pays its full layout build honestly, and
     * replaced layouts are deleted from disk. */
   private val zorderCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
-  def clearZOrderCache(): Unit = zorderCache.synchronized {
-    zorderCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-    zorderCache.clear()
-  }
+  def clearZOrderCache(): Unit = zorderCache.clear()
 
   private def zorderedEvents(s: SparkSession, dir: String): String =
-    zorderCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir, "events.parquet")
-      val c = zorderCache.get(key)
-      if (c != null && c._1 == fp) c._2
-      else {
-        if (c != null) graft.util.deleteRecursively(c._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_zevents").toString
-        // NOTE (r22): a fanOut on the layout build's input was tried
-        // and REVERTED (q_scan_zorder 1.70/1.61 s fanned vs 1.91/1.48 s
-        // plain — a wash): the ~0.6 s serial quantile/bucket head sits
-        // under the exchange+AQE-job break-even.
-        graft.sources.Sinks.writeZOrdered(
-          events(s, dir).select("event_id", "user_id", "ts", "ts_us", "event_type", "value"),
-          path, Seq("user_id", "ts_us"))
-        zorderCache.put(key, (fp, path))
-        path
-      }
+    zorderCache.get((s, dir), inputFingerprint(dir, "events.parquet")) {
+      // NOTE (r22): a fanOut on the layout build's input was tried
+      // and REVERTED (q_scan_zorder 1.70/1.61 s fanned vs 1.91/1.48 s
+      // plain — a wash): the ~0.6 s serial quantile/bucket head sits
+      // under the exchange+AQE-job break-even.
+      graft.Memo.tempDir("graft_zevents")(graft.sources.Sinks.writeZOrdered(
+        events(s, dir).select("event_id", "user_id", "ts", "ts_us", "event_type", "value"),
+        _, Seq("user_id", "ts_us")))
     }
 
   /** B.1 scan over the multi-dimension Z-ORDERED layout

@@ -241,8 +241,9 @@ object Resolve {
     * cross-nation case sharing "united" — all below the 0.6 gate. So
     * every qualifying pair covers its digit token at dist ≤ 1, and
     * digit tokens have df ≈ 1, always under the cap
-    * (FuzzyTokensScaleCheck re-proves zero loss against the unblocked
-    * cross join at 10×). The scale shape is the fuzzy-join family's:
+    * (PERF.md, "Round-19: the three new keys hash-proven at 10x
+    * density": zero loss against the unblocked cross join at 10×,
+    * executed distributed). The scale shape is the fuzzy-join family's:
     * explode → variant equi-join on a scaling key with cap-bounded
     * fan-out → verify. */
   def joinFuzzyTokens(s: SparkSession, dir: String): DataFrame = {
@@ -497,44 +498,26 @@ object Resolve {
     * concurrent lookups of other variants wait; acceptable because the
     * declared-query drivers are single-threaded per session). */
   private val labelsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String),
-      (String, DataFrame, Option[org.apache.spark.rdd.RDD[_]])]()
+    graft.Memo[(SparkSession, String, String), graft.Memo.Checkpointed](
+      graft.Memo.unpersistCheckpoint)
 
   private[graft] def clusterLabelsCached(s: SparkSession, dir: String,
       variant: String, pop: DataFrame => DataFrame): DataFrame =
-    labelsCache.synchronized {
-      val key = (s, dir, variant)
-      val fp = graft.util.inputFingerprint(dir, "customer.parquet")
-      val cached = labelsCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        // a replaced entry's checkpoint blocks are unpersisted here and in
-        // clearLabelsCache (the Dedup discipline) — otherwise stale
-        // MEMORY_AND_DISK blocks linger until ContextCleaner GC
-        if (cached != null)
-          cached._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-        val cust = pop(t(s, dir, "customer"))
-        val edges = scoredPairsFrom(cust)
-          .where(col("score") >= MatchThreshold)
-          .select(col("key_a").as("d1"), col("key_b").as("d2"))
-        val (lbl, ckpt) = Dedup.propagateMinLabelTracked(edges)
-        val labels = cust.select(col("c_custkey"))
-          .join(lbl.select(col("doc_id").as("c_custkey"), col("cluster_id")),
-            Seq("c_custkey"), "left")
-          .select(col("c_custkey"),
-            coalesce(col("cluster_id"), col("c_custkey")).as("entity_id"))
-        labelsCache.put(key, (fp, labels, ckpt))
-        labels
-      }
-    }
+    labelsCache.get((s, dir, variant), graft.util.inputFingerprint(dir, "customer.parquet")) {
+      val cust = pop(t(s, dir, "customer"))
+      val edges = scoredPairsFrom(cust)
+        .where(col("score") >= MatchThreshold)
+        .select(col("key_a").as("d1"), col("key_b").as("d2"))
+      val (lbl, ckpt) = Dedup.propagateMinLabelTracked(edges)
+      val labels = cust.select(col("c_custkey"))
+        .join(lbl.select(col("doc_id").as("c_custkey"), col("cluster_id")),
+          Seq("c_custkey"), "left")
+        .select(col("c_custkey"),
+          coalesce(col("cluster_id"), col("c_custkey")).as("entity_id"))
+      (labels, ckpt)
+    }._1
 
-  def clearLabelsCache(): Unit = labelsCache.synchronized {
-    labelsCache.forEach { (_, v) =>
-      v._3.foreach(r => try r.unpersist(false) catch { case _: Throwable => })
-    }
-    labelsCache.clear()
-  }
+  def clearLabelsCache(): Unit = labelsCache.clear()
 
   val entityResolveClustersSql: String =
     s"""WITH RECURSIVE $scoredPairsCte,

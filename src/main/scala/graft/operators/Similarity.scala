@@ -193,7 +193,7 @@ object Similarity {
     * is unpersisted, so stale MEMORY_ONLY blocks don't pin the executor
     * heap for the JVM lifetime. */
   private val codebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, DataFrame)]()
+    graft.Memo[(SparkSession, String), DataFrame](graft.Memo.unpersist)
 
   /** driver-side listing of the embeddings input — see util.inputFingerprint */
   private def inputFingerprint(dir: String): String =
@@ -207,29 +207,13 @@ object Similarity {
     (1 to IvfIters).foldLeft(ivfCodebook(e, k))((b, _) => lloydStep(s, e, b))
 
   private def trainedCodebook(s: SparkSession, dir: String): DataFrame =
-    codebookCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir)
-      val cached = codebookCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null)
-          try cached._2.unpersist(blocking = false) catch { case _: Throwable => }
-        val e = t(s, dir, "embeddings")
-        val book = trainCodebook(s, e)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-        codebookCache.put(key, (fp, book))
-        book
-      }
+    codebookCache.get((s, dir), inputFingerprint(dir)) {
+      trainCodebook(s, t(s, dir, "embeddings"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
     }
 
   /** unpersist and drop every cached codebook (test/teardown hook) */
-  def clearCodebookCache(): Unit = codebookCache.synchronized {
-    codebookCache.forEach { (_, v) =>
-      try v._2.unpersist(blocking = false) catch { case _: Throwable => }
-    }
-    codebookCache.clear()
-  }
+  def clearCodebookCache(): Unit = codebookCache.clear()
 
   /** CTE chain deriving the trained codebook in DuckDB: `cents0` is the
     * md5 sample; each iteration replays assignment (floor-rounded cosine
@@ -957,28 +941,14 @@ object Similarity {
   /** index path memoized per (session, dir, input fingerprint) — same
     * staleness contract as the text gram index */
   private val semIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
   def ensureSemanticIndex(s: SparkSession, dir: String): String =
-    semIndexCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir)
-      val cached = semIndexCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        if (cached != null) graft.util.deleteRecursively(cached._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
-        writeSemanticIndex(s, dir, path)
-        semIndexCache.put(key, (fp, path))
-        path
-      }
+    semIndexCache.get((s, dir), inputFingerprint(dir)) {
+      graft.Memo.tempDir("graft_sem_idx")(writeSemanticIndex(s, dir, _))
     }
 
-  def clearSemanticIndexCache(): Unit =
-    semIndexCache.synchronized {
-      semIndexCache.forEach((_, v) => graft.util.deleteRecursively(v._2))
-      semIndexCache.clear()
-    }
+  def clearSemanticIndexCache(): Unit = semIndexCache.clear()
 
   /** Probe a persisted semantic index with ARBITRARY vectors (vec_id,
     * embedding) — the reusable core: the declared incremental query feeds

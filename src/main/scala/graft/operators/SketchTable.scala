@@ -50,26 +50,13 @@ object SketchTable {
     * events fingerprint like the bucketed/z-order layouts; Bench clears
     * it so `q_sketch_rollup` pays its build honestly */
   private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]()
+    graft.Memo[(SparkSession, String), String](graft.util.deleteRecursively)
 
-  def clearTableCache(): Unit = tableCache.synchronized {
-    tableCache.forEach((_, v) => deleteRecursively(v._2))
-    tableCache.clear()
-  }
+  def clearTableCache(): Unit = tableCache.clear()
 
   private def sketchTable(s: SparkSession, dir: String): String =
-    tableCache.synchronized {
-      val key = (s, dir)
-      val fp = inputFingerprint(dir, "events.parquet")
-      val c = tableCache.get(key)
-      if (c != null && c._1 == fp) c._2
-      else {
-        if (c != null) deleteRecursively(c._2)
-        val path = java.nio.file.Files.createTempDirectory("graft_sketches").toString
-        writeSketchDailies(s, dir, path)
-        tableCache.put(key, (fp, path))
-        path
-      }
+    tableCache.get((s, dir), inputFingerprint(dir, "events.parquet")) {
+      graft.Memo.tempDir("graft_sketches")(writeSketchDailies(s, dir, _))
     }
 
   /** per-event-type rollup over ANY frame of sketch-state rows (daily

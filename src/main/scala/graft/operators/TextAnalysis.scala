@@ -224,29 +224,20 @@ object TextAnalysis {
     * of a persisted index: training is nMerges serial distributed rounds,
     * which the declared encode query shouldn't re-pay per call */
   private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, Seq[(String, String)])]()
+    graft.Memo[(SparkSession, String), Seq[(String, String)]](graft.Memo.keep)
 
   def ensureBpeMerges(s: SparkSession, dir: String,
       nMerges: Int = 8): Seq[(String, String)] =
-    bpeMergeCache.synchronized {
-      val key = (s, dir)
-      val fp = graft.util.inputFingerprint(dir, "documents.parquet") + s":$nMerges"
-      val cached = bpeMergeCache.get(key)
-      if (cached != null && cached._1 == fp) cached._2
-      else {
-        val merges = bpeTrainMerges(
-          t(s, dir, "documents").select("text"), nMerges)
-          .sortBy(_._1).map(m => (m._2, m._3))
-        bpeMergeCache.put(key, (fp, merges))
-        merges
-      }
+    bpeMergeCache.get((s, dir),
+        graft.util.inputFingerprint(dir, "documents.parquet") + s":$nMerges") {
+      bpeTrainMerges(t(s, dir, "documents").select("text"), nMerges)
+        .sortBy(_._1).map(m => (m._2, m._3))
     }
 
-  /** bench cold-cache hook, mirroring the index-cache clears: without it
-    * q_bpe_encode is measured warm after its first run and the reported
-    * cost omits the nMerges-round distributed training */
-  def clearBpeMergeCache(): Unit =
-    bpeMergeCache.synchronized { bpeMergeCache.clear() }
+  /** bench cold-cache hook: without it q_bpe_encode is measured warm
+    * after its first run and the reported cost omits the nMerges-round
+    * distributed training */
+  def clearBpeMergeCache(): Unit = bpeMergeCache.clear()
 
   /** BPE-style ENCODE: apply a trained merge table to the corpus — one
     * greedy left-to-right non-overlapping pass per merge in rank order,

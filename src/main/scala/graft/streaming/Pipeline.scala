@@ -54,7 +54,7 @@ object Pipeline {
     * cached gates after rewriting their corpus; the cache serves the
     * restarted stream the fresh frame. */
   private val gateStatsCache =
-    new java.util.HashMap[(SparkSession, String, String), (String, DataFrame)]
+    graft.Memo[(SparkSession, String, String), DataFrame](graft.Memo.unpersist)
 
   /** sessions whose SparkContext already carries the eviction listener
     * (one listener per session, not per entry; weak so the set itself
@@ -68,42 +68,30 @@ object Pipeline {
       s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          // the memo's own lock, which also guards evictionHooked.add
           gateStatsCache.synchronized {
             // the context is ending — just drop the references (no
             // unpersist RPC is possible against a stopped context)
-            gateStatsCache.keySet.removeIf(_._1 eq s)
+            gateStatsCache.evict(_._1 eq s)
             evictionHooked.remove(s)
           }
       })
     }
 
   private def cachedGateFrame(s: SparkSession, corpusDir: String, kind: String)(
-      build: => DataFrame): DataFrame = gateStatsCache.synchronized {
-    val key = (s, corpusDir, kind)
-    val fp = graft.util.inputFingerprint(corpusDir, "documents.parquet")
-    val cached = gateStatsCache.get(key)
-    if (cached != null && cached._1 == fp) cached._2
-    else {
-      if (cached != null)
-        try cached._2.unpersist(blocking = false) catch { case _: Throwable => }
+      build: => DataFrame): DataFrame =
+    gateStatsCache.get((s, corpusDir, kind),
+        graft.util.inputFingerprint(corpusDir, "documents.parquet")) {
       val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       hookEviction(s)
-      gateStatsCache.put(key, (fp, df))
       df
     }
-  }
 
   /** unpersist and drop every cached gate-statistics frame (teardown /
     * test hook — the release path for long-lived sessions) */
-  def clearGateStatsCache(): Unit = gateStatsCache.synchronized {
-    gateStatsCache.forEach { (_, v) =>
-      try v._2.unpersist(blocking = false) catch { case _: Throwable => }
-    }
-    gateStatsCache.clear()
-  }
+  def clearGateStatsCache(): Unit = gateStatsCache.clear()
 
-  private[graft] def gateStatsCacheSize: Int =
-    gateStatsCache.synchronized(gateStatsCache.size)
+  private[graft] def gateStatsCacheSize: Int = gateStatsCache.size
 
   /** Transport adapter for Kafka-fronted fleets: map the Spark Kafka
     * source's FIXED record schema (key/value BINARY, topic STRING,

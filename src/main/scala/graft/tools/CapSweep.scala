@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not shipped surface): measure incremental-probe RECALL as a
@@ -26,15 +26,7 @@ object CapSweep {
         case "auto" => graft.operators.Dedup.SimhashCapAuto
         case n => n.toInt
       }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.benchLocal(graft.GraftSession.envCores.toString)
     spark.sparkContext.setLogLevel("WARN")
 
     val batch = graft.util.t(spark, sfDir, "documents")

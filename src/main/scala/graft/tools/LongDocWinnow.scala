@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -25,12 +25,7 @@ object LongDocWinnow {
     val docChars = args.drop(1).headOption.map(_.toInt).getOrElse(3 << 20)
     val sharedChars = args.drop(2).headOption.map(_.toInt).getOrElse(200000)
     val w = args.drop(3).headOption.map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     graft.functions.TextExpressions.register(spark)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -19,7 +18,8 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val keys = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
     // identical session shape to Bench by construction (one shared helper)
     val spark = graft.GraftSession.benchLocal(cpus, appName = "graft-profile")
     spark.sparkContext.setLogLevel("WARN")
@@ -68,28 +68,8 @@ object Profile {
       try fn(spark, dir).write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
 
-    def clearCaches(): Unit = {
-      graft.operators.Dedup.clearLabelsCache()
-      graft.operators.Dedup.clearGramIndexCache()
-      graft.operators.Dedup.clearSimhashIndexCache()
-      graft.operators.Dedup.clearMinhashIndexCache()
-      graft.operators.Dedup.clearSubstrIndexCache()
-      graft.operators.Dedup.clearWinnowIndexCache()
-      graft.operators.Dedup.clearSubstringSpansCache()
-      graft.operators.TextAnalysis.clearBpeMergeCache()
-      graft.operators.Similarity.clearCodebookCache()
-      graft.operators.Similarity.clearSemanticIndexCache()
-      graft.operators.Resolve.clearLabelsCache()
-      graft.operators.Bucketing.clearTableCache()
-      graft.operators.Relational.clearZOrderCache()
-      graft.operators.Relational.clearTextFormatsCache()
-      graft.operators.SketchTable.clearTableCache()
-      graft.operators.CorpusOps.clearSourceSketchCache()
-      graft.operators.CorpusOps.clearFrontierCache()
-    }
-
     for (k <- keys; fn <- graft.SparkEntry.queries.get(k)) {
-      clearCaches()
+      graft.Memo.clearAll()
       stages.clear(); jobs.clear()
       spark.sparkContext.setJobDescription(k)
       val t0 = System.nanoTime()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not shipped surface): measure the entity-resolution family's
@@ -44,13 +44,7 @@ object ResolveScaleTiming {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val ks = if (args.length > 1) args.drop(1).toSeq.map(_.toInt) else Seq(1, 10)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-resolve-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
 
     val base = spark.read.parquet(s"$dir/customer.parquet")

@@ -2,7 +2,6 @@ package graft.tools
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Dev tool (not shipped surface): grow streaming keyed state to a size
@@ -23,21 +22,13 @@ object StateVolume {
     val provider = args.headOption.getOrElse("rocksdb")
     val nKeys = args.drop(1).headOption.map(_.toLong).getOrElse(20000000L)
     val rowsPerBatch = args.drop(2).headOption.map(_.toLong).getOrElse(2000000L)
-    val b = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    if (provider == "rocksdb")
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = b.getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores)
     spark.sparkContext.setLogLevel("WARN")
     // root-at-WARN arms rocksdbjni's native WARN-level JNI log callback,
     // which segfaulted this tool twice at 100M×4M (PERF.md adjudication);
     // pin the state-store class logger to ERROR before the query starts
     if (provider == "rocksdb") {
-      graft.streaming.Pipeline.quietRocksDbNativeLogger()
+      graft.streaming.Pipeline.useRocksDbStateStore(spark)
       val cl = org.slf4j.LoggerFactory.getLogger(
         "org.apache.spark.sql.execution.streaming.state.RocksDB")
       println(s"rocksdb class logger: warnEnabled=${cl.isWarnEnabled} " +

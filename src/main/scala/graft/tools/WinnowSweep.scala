@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool (not shipped surface): measure the winnowing dial — coverage
@@ -19,15 +19,7 @@ object WinnowSweep {
     val ws = args.drop(1).headOption
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(3, 5, 9, 17, 33))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.benchLocal(graft.GraftSession.envCores.toString)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.TextExpressions.register(spark)
     val L = graft.operators.Dedup.SubstrL

@@ -19,8 +19,8 @@ object util {
   type Q = (SparkSession, String) => DataFrame
 
   // NOTE (r21): a per-(session, table) SCHEMA memo for t() was tried and
-  // reverted — tools.SchemaCost measures cold schema inference at ~57 ms
-  // vs ~5 ms with an explicit schema, but two full-bench A/Bs read the
+  // reverted — a one-off micro-bench measured cold schema inference at
+  // ~57 ms vs ~5 ms with an explicit schema, but two full-bench A/Bs read the
   // memo as a wash (median per-query ratio 1.01x): in a long-lived bench
   // session the footer/listing work is already OS/session-cache warm, so
   // the memo only added bookkeeping.

@@ -64,7 +64,6 @@ class SourceHygieneSpec extends AnyFunSuite {
     "ScaleTestdata.scala" -> 1,
     "SemanticKScale.scala" -> 1,
     "ResolveScaleTiming.scala" -> 2, // two 1-row aggregates (cross-pair total, entity count)
-    "WinnowApplyTiming.scala" -> 2, // two 1-row char-total aggregates
     "WinnowSweep.scala" -> 3)
 
   test("no .collect() in main operator/function/source/streaming code outside the allowlist") {

@@ -1,10 +1,16 @@
 package graft.sources
 
+import java.util.Optional
+import java.util.concurrent.atomic.AtomicLong
+
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReadMinRows, ReportsSourceMetrics, SupportsAdmissionControl}
+import org.apache.spark.sql.execution.streaming.ProcessingTimeTrigger
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,6 +33,23 @@ object Ingest {
 
   /** reference's bounded channel (main.go:21) */
   val BufferLimit = 10000
+
+  /** Milliseconds in an interval written the way `Trigger.ProcessingTime`
+    * takes it ("2 seconds", "500 milliseconds", "1 day"); anything that
+    * does not parse to a POSITIVE interval is an IllegalArgumentException
+    * naming the value. */
+  def intervalMs(interval: String): Long = {
+    val ms =
+      try Trigger.ProcessingTime(interval) match { case t: ProcessingTimeTrigger => t.intervalMs }
+      catch { case NonFatal(e) =>
+        throw new IllegalArgumentException(s"'$interval' is not an interval: ${e.getMessage}") }
+    if (ms <= 0) throw new IllegalArgumentException(s"'$interval' is not a positive interval")
+    ms
+  }
+
+  /** the sources' `flushInterval` option in ms; 0 when unset */
+  def flushIntervalMs(options: java.util.Map[String, String]): Long =
+    Option(options.get("flushInterval")).fold(0L)(intervalMs)
 
   // ---- dual-stack binding + sender stamping -----------------------------
   /** Bind a UDP listener dual-stack: the IPv6 wildcard "::" accepts both
@@ -105,6 +128,13 @@ final class BoundedRowLog(limit: Int) {
 
   def latest: Long = synchronized { trimmed + rows.length }
 
+  /** receive `ts` (µs) of the row at `offset` (clamped to the head, like
+    * [[slice]]), or None when no such row is buffered */
+  def tsAt(offset: Long): Option[Long] = synchronized {
+    val i = math.max(offset - trimmed, 0L)
+    if (i < rows.length) Some(rows(i.toInt)._3) else None
+  }
+
   def slice(from: Long, until: Long): Array[(String, String, Long)] = synchronized {
     val lo = math.max(from - trimmed, 0L).toInt
     val hi = math.max(until - trimmed, 0L).toInt
@@ -142,6 +172,8 @@ case class IngestOffset(ns: Seq[Long]) extends Offset {
 }
 object IngestOffset {
   def apply(n: Long): IngestOffset = IngestOffset(Seq(n))
+  def fromJson(json: String): IngestOffset =
+    IngestOffset(json.split(",").map(_.trim.toLong).toSeq)
 }
 
 case class IngestInputPartition(rows: Array[(String, String, Long)]) extends InputPartition
@@ -149,42 +181,104 @@ case class IngestInputPartition(rows: Array[(String, String, Long)]) extends Inp
 /** Transport-agnostic micro-batch stream over per-port [[BoundedRowLog]]s.
   * Subclasses supply the listener registry (`log`/`stopPort`); everything
   * else — admission, offsets, planning — is shared verbatim between the
-  * UDP and TCP sources. */
-abstract class BufferedMicroBatchStream(ports: Seq[Int], maxRowsPerBatch: Long)
-    extends MicroBatchStream with SupportsAdmissionControl {
+  * UDP and TCP sources.
+  *
+  * Admission is the reference's flush rule (lib/cacheManage.go:19-29):
+  * a batch holds at most `maxRowsPerBatch` rows (≤ 0: uncapped), split
+  * max-min fair across listeners. With `flushIntervalMs` > 0 (the
+  * sources' `flushInterval` option) the source ALSO decides when a batch
+  * is due, so the query runs on `Trigger.ProcessingTime(0)` and
+  * `latestOffset` returns its start until either half holds:
+  *   - count half: the global backlog is at least `maxRowsPerBatch`;
+  *   - time half: a pending row was received before the latest interval
+  *     tick (multiples of the interval since the epoch, the phase
+  *     `ProcessingTime` fires on). A count flush does not move the
+  *     ticks, as in the reference.
+  * The rule rides in the default read limit the way the Kafka source's
+  * `minOffsetsPerTrigger`/`maxTriggerDelay` do — `ReadMinRows(rows,
+  * interval)`, its delay read as the tick interval — so a trigger that
+  * reads everything (`Trigger.Once`) is never held back. As with Kafka's
+  * minimum, `processAllAvailable()` can return while rows below both
+  * thresholds are still pending. Without the option every trigger admits
+  * what is available (up to the cap) and the query's own trigger is the
+  * time half. */
+abstract class BufferedMicroBatchStream(ports: Seq[Int], maxRowsPerBatch: Long,
+    flushIntervalMs: Long)
+    extends MicroBatchStream with SupportsAdmissionControl with ReportsSourceMetrics {
 
   protected def log(port: Int): BoundedRowLog
   protected def stopPort(port: Int): Unit
 
   private def rxs = ports.map(log)
 
+  /** admitted batches by the half of the flush rule that fired them
+    * (without `flushInterval`, an uncapped batch counts as a time flush:
+    * the query's trigger clock fired it) */
+  private val countFlushes = new AtomicLong
+  private val timeFlushes = new AtomicLong
+
   /** offsets written by an older (or re-configured) port list may carry
     * fewer/more lanes — missing lanes start at 0, surplus lanes' rows are
-    * gone with their listeners (at-most-once, like the rebase path) */
-  private def aligned(o: Offset): Seq[Long] =
-    o.asInstanceOf[IngestOffset].ns.padTo(ports.length, 0L).take(ports.length)
+    * gone with their listeners (at-most-once, like the rebase path).
+    * After a restart the engine hands `metrics` the offset log's
+    * serialized form, hence the json branch. */
+  private def aligned(o: Offset): Seq[Long] = (o match {
+    case IngestOffset(ns) => ns
+    case other => IngestOffset.fromJson(other.json).ns
+  }).padTo(ports.length, 0L).take(ports.length)
 
   // start from 0, not rx.latest: rows buffered between listener bind and
   // stream start must land in the first batch, not be skipped
   override def initialOffset(): Offset = { rxs; IngestOffset(ports.map(_ => 0L)) }
   override def latestOffset(): Offset = IngestOffset(rxs.map(_.latest))
 
-  // count half of the reference's 1000-row/2s flush rule, expressed as
-  // micro-batch admission control: a burst never lands in one giant
-  // batch — the cap is GLOBAL across listeners, preserving the contract
-  // whatever the listener count
-  override def getDefaultReadLimit: ReadLimit =
-    if (maxRowsPerBatch > 0) ReadLimit.maxRows(maxRowsPerBatch)
-    else ReadLimit.allAvailable()
+  // the reference's flush rule as micro-batch admission control: the cap
+  // is GLOBAL across listeners, preserving the contract whatever the
+  // listener count; the hold-back (see the class doc) only with an interval
+  override def getDefaultReadLimit: ReadLimit = {
+    val cap = if (maxRowsPerBatch > 0) ReadLimit.maxRows(maxRowsPerBatch) else ReadLimit.allAvailable()
+    if (flushIntervalMs <= 0) cap
+    else ReadLimit.compositeLimit(Array(ReadLimit.minRows(
+      if (maxRowsPerBatch > 0) maxRowsPerBatch else Long.MaxValue, flushIntervalMs), cap))
+  }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val from = aligned(start)
-    val avail = rxs.zip(from).map { case (rx, f) => math.max(rx.latest - f, 0L) }
-    val budget = limit match {
-      case r: ReadMaxRows => r.maxRows()
-      case _ => Long.MaxValue
+    val logs = rxs
+    val avail = logs.zip(from).map { case (rx, f) => math.max(rx.latest - f, 0L) }
+    val limits = limit match {
+      case c: CompositeReadLimit => c.getReadLimits.toSeq
+      case l => Seq(l)
     }
+    val budget = limits.collectFirst { case r: ReadMaxRows => r.maxRows() }.getOrElse(Long.MaxValue)
+    val hold = limits.collectFirst { case r: ReadMinRows => r }
+    val backlog = avail.sum
+    val countDue = backlog >= hold.fold(budget)(_.minRows())
+    // held back: below both halves of the flush rule
+    if (backlog > 0 && !countDue &&
+        hold.exists(h => !pendingBeforeTick(logs, from, h.maxTriggerDelayMs()))) return start
+    if (backlog > 0) (if (countDue) countFlushes else timeFlushes).incrementAndGet()
     IngestOffset(from.zip(fairShares(avail, budget)).map { case (f, take) => f + take })
+  }
+
+  /** time half: some listener's oldest pending row was received before
+    * the latest tick (per-listener logs are in receive order) */
+  private def pendingBeforeTick(logs: Seq[BoundedRowLog], from: Seq[Long],
+      intervalMs: Long): Boolean = {
+    val tickUs = System.currentTimeMillis() / intervalMs * intervalMs * 1000L
+    logs.zip(from).exists { case (rx, f) => rx.tsAt(f).exists(_ < tickUs) }
+  }
+
+  /** `backlogRows`: rows received but not yet in a finished batch;
+    * `countFlushes`/`timeFlushes`: batches admitted by each half of the
+    * flush rule — so `lastProgress.sources(0).metrics` says why each
+    * batch fired */
+  override def metrics(latestConsumedOffset: Optional[Offset]): java.util.Map[String, String] = {
+    val consumed = if (latestConsumedOffset.isPresent) aligned(latestConsumedOffset.get)
+      else ports.map(_ => 0L)
+    val backlog = rxs.zip(consumed).map { case (rx, n) => math.max(rx.latest - n, 0L) }.sum
+    java.util.Map.of("backlogRows", backlog.toString,
+      "countFlushes", countFlushes.get.toString, "timeFlushes", timeFlushes.get.toString)
   }
 
   /** max-min fair split of a global row budget across listeners: ports
@@ -212,8 +306,7 @@ abstract class BufferedMicroBatchStream(ports: Seq[Int], maxRowsPerBatch: Long)
   // fresh listener to its restored position instead of letting it
   // swallow that many NEW rows (see BoundedRowLog.rebase)
   override def deserializeOffset(json: String): Offset = {
-    val ns = json.split(",").map(_.trim.toLong).toSeq
-      .padTo(ports.length, 0L).take(ports.length)
+    val ns = aligned(IngestOffset.fromJson(json))
     rxs.zip(ns).foreach { case (rx, n) => rx.rebase(n) }
     IngestOffset(ns)
   }

@@ -39,7 +39,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Usage: spark.readStream.format("graft.sources.TcpSyslogSourceProvider")
   *   .option("port", "5514").load() → columns (raw, device, ts), or
-  *   .option("ports", "6601,6602") for N parallel listeners.
+  *   .option("ports", "6601,6602") for N parallel listeners; the
+  *   `maxRowsPerBatch` and `flushInterval` options are the UDP source's.
   */
 object TcpSyslogSourceProvider {
   val Schema: StructType = Ingest.Schema
@@ -268,12 +269,13 @@ class TcpSyslogSourceProvider extends TableProvider {
     } else None
     new TcpTable(ports, tls,
       properties.getOrDefault("maxRowsPerBatch",
-        UdpSourceProvider.FlushRows.toString).toLong)
+        UdpSourceProvider.FlushRows.toString).toLong,
+      Ingest.flushIntervalMs(properties))
   }
 }
 
 class TcpTable(ports: Seq[Int], tls: Option[TlsServerConfig],
-    maxRowsPerBatch: Long) extends Table with SupportsRead {
+    maxRowsPerBatch: Long, flushIntervalMs: Long) extends Table with SupportsRead {
   override def name(): String =
     s"${if (tls.isDefined) "tcp+tls" else "tcp"}:${ports.mkString(",")}"
   override def schema(): StructType = TcpSyslogSourceProvider.Schema
@@ -284,14 +286,14 @@ class TcpTable(ports: Seq[Int], tls: Option[TlsServerConfig],
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = TcpSyslogSourceProvider.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new TcpMicroBatchStream(ports, tls, maxRowsPerBatch)
+          new TcpMicroBatchStream(ports, tls, maxRowsPerBatch, flushIntervalMs)
       }
     }
 }
 
 class TcpMicroBatchStream(ports: Seq[Int], tls: Option[TlsServerConfig],
-    maxRowsPerBatch: Long)
-    extends BufferedMicroBatchStream(ports, maxRowsPerBatch) {
+    maxRowsPerBatch: Long, flushIntervalMs: Long = 0L)
+    extends BufferedMicroBatchStream(ports, maxRowsPerBatch, flushIntervalMs) {
   def this(port: Int, maxRowsPerBatch: Long) = this(Seq(port), None, maxRowsPerBatch)
   def this(ports: Seq[Int], maxRowsPerBatch: Long) = this(ports, None, maxRowsPerBatch)
 

@@ -28,7 +28,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Usage: spark.readStream.format("graft.sources.UdpSourceProvider")
   *   .option("port", "5514").load() → columns (raw, device, ts), or
-  *   .option("ports", "5514,5515,5516") for N parallel listeners.
+  *   .option("ports", "5514,5515,5516") for N parallel listeners;
+  *   .option("flushInterval", "2 seconds") puts the whole flush rule in
+  *   the source (see [[UdpSourceProvider.FlushRows]]).
   *
   * Scale note: ONE listener is the reference's shape (a single socket,
   * main.go:67-71) and a single-threaded receive loop is the ingest
@@ -52,9 +54,14 @@ object UdpSourceProvider {
 
   /** reference's count-based flush bound (`logCacheLimit = 1000`,
     * main.go:19 / lib/cacheManage.go:19-22): a batch flushes at 1000 rows
-    * OR the time trigger, whichever first. Here the count half is the
-    * default micro-batch admission limit (`maxRowsPerBatch` option, ≤ 0
-    * disables); the time half is the query's ProcessingTime trigger. */
+    * OR on the 2 s ticker, whichever first. Here both halves are source
+    * admission: `maxRowsPerBatch` (≤ 0 disables) caps every batch, and
+    * with `flushInterval` set ("2 seconds", the `ProcessingTime` syntax)
+    * the source holds a batch back until the backlog reaches
+    * `maxRowsPerBatch` or a pending row is older than the latest interval
+    * tick, so the query runs on `Trigger.ProcessingTime(0)` (see
+    * [[BufferedMicroBatchStream]]). Without `flushInterval` the time half
+    * is the query's own trigger. */
   val FlushRows = 1000L
 
   /** one receiver per port, shared across micro-batch planning calls */
@@ -119,11 +126,13 @@ class UdpSourceProvider extends TableProvider {
     }
     new UdpTable(ports,
       properties.getOrDefault("maxRowsPerBatch",
-        UdpSourceProvider.FlushRows.toString).toLong)
+        UdpSourceProvider.FlushRows.toString).toLong,
+      Ingest.flushIntervalMs(properties))
   }
 }
 
-class UdpTable(ports: Seq[Int], maxRowsPerBatch: Long) extends Table with SupportsRead {
+class UdpTable(ports: Seq[Int], maxRowsPerBatch: Long, flushIntervalMs: Long)
+    extends Table with SupportsRead {
   override def name(): String = s"udp:${ports.mkString(",")}"
   override def schema(): StructType = UdpSourceProvider.Schema
   override def capabilities(): util.Set[TableCapability] =
@@ -133,13 +142,13 @@ class UdpTable(ports: Seq[Int], maxRowsPerBatch: Long) extends Table with Suppor
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = UdpSourceProvider.Schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new UdpMicroBatchStream(ports, maxRowsPerBatch)
+          new UdpMicroBatchStream(ports, maxRowsPerBatch, flushIntervalMs)
       }
     }
 }
 
-class UdpMicroBatchStream(ports: Seq[Int], maxRowsPerBatch: Long)
-    extends BufferedMicroBatchStream(ports, maxRowsPerBatch) {
+class UdpMicroBatchStream(ports: Seq[Int], maxRowsPerBatch: Long, flushIntervalMs: Long = 0L)
+    extends BufferedMicroBatchStream(ports, maxRowsPerBatch, flushIntervalMs) {
   def this(port: Int, maxRowsPerBatch: Long) = this(Seq(port), maxRowsPerBatch)
 
   override protected def log(port: Int): BoundedRowLog =

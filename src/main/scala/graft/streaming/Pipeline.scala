@@ -14,12 +14,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the batch (at-most-once).
   *
   * Spark mapping:
-  *   - channel + ticker ≡ the micro-batch loop, `Trigger.ProcessingTime(2s)`
-  *     (time half of the trigger; the 1000-row count half has no Spark
-  *     twin — rate limiting via maxFilesPerTrigger/maxOffsetsPerTrigger
-  *     bounds batch size instead, a documented deviation);
-  *   - bounded channel ≡ source-side rate limits + pull-based backpressure
-  *     (count half: UdpSourceProvider.FlushRows admission limit);
+  *   - channel + ticker ≡ source admission control on a polling
+  *     micro-batch loop: with the sources' `flushInterval` option (set by
+  *     `GraftConfig.run`) the source admits a batch once 1000 rows are
+  *     buffered OR a pending row is older than the latest 2 s tick, and
+  *     the query runs on `Trigger.ProcessingTime(0)` — Spark's own shape
+  *     for this rule is the Kafka source's minOffsetsPerTrigger +
+  *     maxTriggerDelay. Callers of the `start*` entry points below that
+  *     pass their own trigger and no `flushInterval` get the time half
+  *     from that trigger and the count half as a per-batch cap;
+  *   - bounded channel ≡ the sources' bounded row logs + pull-based
+  *     backpressure (UdpSourceProvider.FlushRows caps every batch);
   *   - flushLogs ≡ foreachBatch parquet/JDBC append. Delivery: the parquet
   *     path is exactly-once — each batch lands in its own `batch_id=N`
   *     partition with dynamic partition OVERWRITE, so a batch replayed

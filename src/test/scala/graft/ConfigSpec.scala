@@ -21,9 +21,18 @@ class ConfigSpec extends AnyFunSuite {
       "GRAFT_UDP_PORT" -> "not-a-port",
       "GRAFT_SINK_URL" -> "jdbc:x",
       "GRAFT_SINK_TABLE" -> "t",
-      "GRAFT_FLUSH_ROWS" -> "many")))
+      "GRAFT_FLUSH_ROWS" -> "many",
+      "GRAFT_TRIGGER" -> "soon")))
     assert(e.getMessage.contains("GRAFT_UDP_PORT"))
     assert(e.getMessage.contains("GRAFT_FLUSH_ROWS"))
+    assert(e.getMessage.contains("GRAFT_TRIGGER"))
+    // a zero or negative interval is malformed too: ticks need a period
+    Seq("0 seconds", "-2 seconds").foreach { t =>
+      val z = intercept[IllegalArgumentException](GraftConfig.fromEnv(Map(
+        "GRAFT_UDP_PORT" -> "5514", "GRAFT_SINK_URL" -> "jdbc:x",
+        "GRAFT_SINK_TABLE" -> "t", "GRAFT_TRIGGER" -> t)))
+      assert(z.getMessage.contains("GRAFT_TRIGGER"), s"'$t' accepted: ${z.getMessage}")
+    }
   }
 
   test("fromEnv parses a valid environment with defaults") {
@@ -117,6 +126,55 @@ class ConfigSpec extends AnyFunSuite {
         catch { case _: Throwable => 0L }
       }
       assert(n === payloads.size.toLong, "datagrams did not reach the JDBC sink")
+    } finally {
+      sender.close()
+      q.stop()
+    }
+  }
+
+  test("run(): 1000-row batches commit with no tick (count half of the flush rule)") {
+    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    val probe = new DatagramSocket(0)
+    val port = probe.getLocalPort
+    probe.close()
+    val rx = sources.UdpSourceProvider.receiver(port) // bind before sending
+    val db = Files.createTempDirectory("graft_cfg_count_derby").toString + "/cfgdb"
+    // a one-day interval: the time half cannot fire within the test
+    val cfg = GraftConfig.fromEnv(Map(
+      "GRAFT_UDP_PORT" -> port.toString,
+      "GRAFT_SINK_URL" -> s"jdbc:derby:$db;create=true",
+      "GRAFT_SINK_TABLE" -> "mikrotik_logs",
+      "GRAFT_TRIGGER" -> "1 day"))
+    val q = GraftConfig.run(spark, cfg)
+    val sender = new DatagramSocket()
+    try {
+      val target = InetAddress.getByName("127.0.0.1")
+      val total = 2000
+      // 100 datagrams at a time, each chunk received before the next is
+      // sent, so the kernel's receive buffer never overflows
+      (0 until total by 100).foreach { base =>
+        (base until base + 100).foreach { i =>
+          val b = s"system,info count flush $i".getBytes("UTF-8")
+          sender.send(new DatagramPacket(b, b.length, target, port))
+        }
+        val dl = System.currentTimeMillis() + 5000
+        while (rx.latest < base + 100 && System.currentTimeMillis() < dl) Thread.sleep(5)
+      }
+      assert(rx.latest === total.toLong, "datagrams lost on loopback")
+      val deadline = System.currentTimeMillis() + 30000
+      var n = 0L
+      while (n < total && System.currentTimeMillis() < deadline) {
+        Thread.sleep(250)
+        n = try spark.read.jdbc(cfg.sinkUrl, cfg.sinkTable, new java.util.Properties).count()
+        catch { case _: Throwable => 0L }
+      }
+      assert(n === total.toLong, "full batches did not commit without a tick")
+      // the source says why each batch fired
+      q.processAllAvailable()
+      val m = q.lastProgress.sources.head.metrics
+      Seq("backlogRows", "countFlushes", "timeFlushes").foreach(k =>
+        assert(m.containsKey(k), s"source metric $k missing: $m"))
+      assert((m.get("backlogRows"), m.get("countFlushes"), m.get("timeFlushes")) === (("0", "2", "0")))
     } finally {
       sender.close()
       q.stop()

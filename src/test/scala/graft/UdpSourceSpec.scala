@@ -356,4 +356,81 @@ class UdpSourceSpec extends AnyFunSuite {
       } finally q.stop()
     } finally sender.close()
   }
+
+  // ---- the size-OR-time flush rule in the source (flushInterval set) ----
+  // Rows go straight into the receivers' logs with chosen receive stamps:
+  // a stamp an hour ahead can never be older than the latest tick, one two
+  // intervals back always is, so no case waits on the clock.
+
+  private val interval = 2000L
+  private def future: Long = (System.currentTimeMillis() + 3600000L) * 1000L
+  private def past: Long = (System.currentTimeMillis() - 2 * interval) * 1000L
+  private def freePort(): Int = { val p = new DatagramSocket(0); val n = p.getLocalPort; p.close(); n }
+  private def fill(port: Int, n: Int, tsUs: => Long): Unit =
+    (1 to n).foreach(i => sources.UdpSourceProvider.receiver(port).log.append(s"row $i", "dev", tsUs))
+  private def lanes(o: org.apache.spark.sql.connector.read.streaming.Offset): Seq[Long] =
+    o.asInstanceOf[sources.IngestOffset].ns
+  private def withStream(ports: Seq[Int], flushIntervalMs: Long)(
+      body: sources.UdpMicroBatchStream => Unit): Unit = {
+    val stream = new sources.UdpMicroBatchStream(ports, sources.UdpSourceProvider.FlushRows,
+      flushIntervalMs)
+    try body(stream) finally stream.stop()
+  }
+
+  test("flush rule: held below both thresholds, admitted at exactly 1000 rows (count half)") {
+    val port = freePort()
+    withStream(Seq(port), interval) { stream =>
+      val start = stream.initialOffset()
+      val limit = stream.getDefaultReadLimit
+      fill(port, 999, future)
+      assert(stream.latestOffset(start, limit) eq start, "999 fresh rows must wait")
+      fill(port, 1, future)
+      assert(lanes(stream.latestOffset(start, limit)) === Seq(1000L))
+      assert(stream.metrics(java.util.Optional.of(start)).get("countFlushes") === "1")
+    }
+  }
+
+  test("flush rule: one row received before the latest tick is admitted (time half)") {
+    val port = freePort()
+    withStream(Seq(port), interval) { stream =>
+      val start = stream.initialOffset()
+      fill(port, 1, past)
+      assert(lanes(stream.latestOffset(start, stream.getDefaultReadLimit)) === Seq(1L))
+      val m = stream.metrics(java.util.Optional.of(start))
+      assert((m.get("backlogRows"), m.get("countFlushes"), m.get("timeFlushes")) === (("1", "0", "1")))
+    }
+  }
+
+  test("flush rule: two listeners keep the global cap and the fair split") {
+    val (portA, portB) = (freePort(), freePort())
+    withStream(Seq(portA, portB), interval) { stream =>
+      val start = stream.initialOffset()
+      val limit = stream.getDefaultReadLimit
+      // an old row on B is due: the time flush takes A's pending rows too
+      fill(portA, 3, future)
+      fill(portB, 1, past)
+      val end1 = stream.latestOffset(start, limit)
+      assert(lanes(end1) === Seq(3L, 1L))
+      // 1500 fresh rows: one 1000-row batch, split max-min fair
+      fill(portA, 800, future)
+      fill(portB, 700, future)
+      val end2 = stream.latestOffset(end1, limit)
+      assert(lanes(end2) === Seq(503L, 501L), s"global cap or fair split violated: ${lanes(end2)}")
+      // the 500-row remainder is fresh and below the count: held back
+      assert(stream.latestOffset(end2, limit) eq end2)
+    }
+  }
+
+  test("flush rule: without flushInterval every trigger admits what is available, as before") {
+    val port = freePort()
+    withStream(Seq(port), 0L) { stream =>
+      assert(stream.getDefaultReadLimit ===
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(1000))
+      val start = stream.initialOffset()
+      fill(port, 5, future)
+      assert(lanes(stream.latestOffset(start, stream.getDefaultReadLimit)) === Seq(5L))
+      fill(port, 1200, future)
+      assert(lanes(stream.latestOffset(start, stream.getDefaultReadLimit)) === Seq(1000L))
+    }
+  }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Canonical log data model + the syslog "topics" parser, re-expressed as
-  * pure Catalyst column expressions (codegen-friendly, no UDF).
+/** Canonical log data model + the syslog "topics" parser, as one native
+  * codegen'd expression (no UDF); the RFC decode below is Catalyst column
+  * expressions.
   *
   * Semantics derived from the reference parser
   * `/root/reference/lib/lopParse.go:29-81` (see SURVEY.md §1.4):
@@ -44,30 +45,13 @@ object model {
 
   def severityKnown(tok: Column): Column = tok.isin(knownTokens: _*)
 
-  /** full parse: raw line → struct(severity, categories, message).
-    * try_element_at (not element_at) everywhere an index can be absent:
-    * under ANSI mode (Spark 4 default) element_at THROWS on out-of-bounds —
-    * a space-free datagram would crash the job exactly like the reference's
-    * lopParse.go:33 panic this parser is specified to fix. */
-  def parseSyslog(raw: Column): Column = {
-    val parts   = split(raw, " ", 2)
-    val catStr  = parts.getItem(0)
-    val msg     = coalesce(try_element_at(parts, lit(2)), lit(""))
-    val topics  = split(catStr, ",")
-    val fb      = size(topics) < 2
-    val sevTok  = try_element_at(topics, lit(2))
-    val known   = severityKnown(sevTok)
-    val emptyA  = array().cast(ArrayType(StringType))
-    val cats = when(fb, array(lit("unknown"))).otherwise(
-      concat(
-        array(topics.getItem(0)),
-        slice(topics, lit(3), greatest(size(topics) - 2, lit(0))),
-        when(known, emptyA).otherwise(array(sevTok))))
-    struct(
-      when(fb, lit(6).cast(ByteType)).otherwise(severityCode(sevTok)).as("severity"),
-      cats.as("categories"),
-      when(fb, raw).otherwise(msg).as("message"))
-  }
+  /** full parse: raw line → struct(severity, categories, message), one
+    * native [[graft.functions.SyslogParse]] node (a single static call in
+    * generated code, the table above as its severity lookup). Total on
+    * every input, including the no-space lines the reference panics on; a
+    * null line gives (6, null, ""). Needs no session or registration. */
+  def parseSyslog(raw: Column): Column =
+    org.apache.spark.sql.graftshim.ExpressionColumn.unary(raw)(graft.functions.SyslogParse(_))
 
   // ---- real-syslog header decode (RFC 5424 / RFC 3164) -----------------
   // The reference README claims RFC 5424 (README.md:60) but parses only

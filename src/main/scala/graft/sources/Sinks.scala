@@ -238,20 +238,4 @@ object Sinks {
       stored == manifestJson(spark, path, format)
     }
   }
-
-  /** JDBC twin of the reference's batched ClickHouse insert
-    * (lib/cacheManage.go:35-65): 1000-row batches, bounded connection
-    * fan-out (the reference pools 5 connections, main.go:49-50). Wire it
-    * inside foreachBatch for streaming. Untestable in this environment
-    * (no database), kept as the documented production path. */
-  def writeJdbcBatched(df: DataFrame, url: String, table: String,
-      batchSize: Int = 1000, connections: Int = 5): Unit =
-    df.coalesce(connections).write
-      .format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("batchsize", batchSize)
-      .option("isolationLevel", "NONE") // bulk append, ClickHouse-style
-      .mode("append")
-      .save()
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.net.DatagramPacket
+import java.nio.charset.StandardCharsets
 import java.util
 import java.util.concurrent.ConcurrentHashMap
 
@@ -87,11 +88,12 @@ final class UdpReceiver(port: Int) extends Thread(s"graft-udp-$port") {
 
   override def run(): Unit = {
     val buf = new Array[Byte](UdpSourceProvider.MaxDatagram)
+    val pkt = new DatagramPacket(buf, buf.length)
     while (running) {
       try {
-        val pkt = new DatagramPacket(buf, buf.length)
+        pkt.setLength(buf.length)
         socket.receive(pkt) // blocking, like ReadFromUDP
-        val raw = new String(pkt.getData, 0, pkt.getLength, "UTF-8")
+        val raw = new String(buf, 0, pkt.getLength, StandardCharsets.UTF_8)
         val device = Ingest.deviceOf(pkt.getAddress, pkt.getPort)
         val ts = System.currentTimeMillis() * 1000L // µs
         // bounded buffer: block ingest (kernel drops overflow) — the

@@ -199,6 +199,10 @@ object Pipeline {
       batch.write.mode("append").jdbc(url, table, props)
     }
 
+  /** the JDBC sinks' row: [[parseToLog]] with `categories` comma-joined */
+  private[graft] def jdbcRows(lines: DataFrame): DataFrame =
+    parseToLog(lines).withColumn("categories", array_join(col("categories"), ","))
+
   /** shared JDBC stream builder: ONE parse projection + categories
     * flattening + writeStream scaffold for both delivery contracts — a
     * future change to the projection cannot silently fork the
@@ -208,8 +212,7 @@ object Pipeline {
     // a ClickHouse URL gets the reference-parity dialect (Array(String)
     // categories, Int8 severity); any other URL is untouched
     graft.sources.ClickHouseDialect.register()
-    parseToLog(lines)
-      .withColumn("categories", array_join(col("categories"), ","))
+    jdbcRows(lines)
       .writeStream
       .trigger(trigger)
       .outputMode(OutputMode.Append)

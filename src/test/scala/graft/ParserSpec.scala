@@ -13,8 +13,10 @@ class ParserSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** parse through an RDD scan: over a local Seq the optimizer would
+    * fold the projection into the relation and only ever run `eval` */
   private def parse(lines: Seq[String]): Seq[(String, Byte, Seq[String], String)] =
-    lines.toDF("raw")
+    spark.sparkContext.parallelize(lines, 2).toDF("raw")
       .select(col("raw"), model.parseSyslog(col("raw")).as("p"))
       .select("raw", "p.severity", "p.categories", "p.message")
       .as[(String, Byte, Seq[String], String)]
@@ -40,13 +42,45 @@ class ParserSpec extends AnyFunSuite {
     ("plainword no commas here", 6, Seq("unknown"), "plainword no commas here"),
     ("nospacetoken", 6, Seq("unknown"), "nospacetoken"),
     ("", 6, Seq("unknown"), ""),
-    ("firewall,info ", 6, Seq("firewall"), ""))
+    ("firewall,info ", 6, Seq("firewall"), ""),
+    // engine-defined edges, pinned from the Column-tree parser under
+    // ANSI: a null line keeps severity 6 with null categories and an
+    // empty message (ANSI `size(null)` is null, so the fallback never
+    // fires); empty comma fields are topics, an empty severity token
+    // is unknown and appended like any other
+    (null, 6, null, ""),
+    ("a,info,", 6, Seq("a", ""), ""),
+    (",", 6, Seq("", ""), ""),
+    (" x", 6, Seq("unknown"), " x"),
+    ("a,", 6, Seq("a", ""), ""),
+    // multi-byte UTF-8 on both sides of the first space and the commas
+    ("zöne,wärn,ß€ mëssage ü", 6, Seq("zöne", "ß€", "wärn"), "mëssage ü"),
+    ("日本,error,é 語 x", 3, Seq("日本", "é"), "語 x"))
 
-  test("every parser branch matches the reference semantics table") {
-    val got = parse(expected.map(_._1)).map(r => (r._1, r._2.toInt, r._3, r._4))
-    expected.zip(got).foreach { case (want, have) =>
+  /** `body` with whole-stage codegen off and the interpreted projection
+    * factory, so every expression runs through `eval` */
+  private def interpreted[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def checkTable(got: Seq[(String, Byte, Seq[String], String)]): Unit =
+    expected.zip(got.map(r => (r._1, r._2.toInt, r._3, r._4))).foreach { case (want, have) =>
       assert(have === want, s"for raw line '${want._1}'")
     }
+
+  test("every parser branch matches the reference semantics table") {
+    checkTable(parse(expected.map(_._1)))
+  }
+
+  test("interpreted eval matches the reference semantics table") {
+    checkTable(interpreted(parse(expected.map(_._1))))
   }
 
   // --- property tests over generated lines (deterministic seed) ---------
@@ -61,6 +95,30 @@ class ParserSpec extends AnyFunSuite {
 
   private def samples(n: Int): Seq[String] =
     (0 until n).flatMap(i => lineGen.apply(Gen.Parameters.default, Seed(42L + i)))
+
+  /** the topics parse in plain Scala string splits, independent of the
+    * byte-level kernel: first ' ' splits head from message, the head's
+    * ',' fields (empties kept) give topic, severity token and the rest */
+  private def reference(raw: String): (String, Byte, Seq[String], String) = {
+    val parts = raw.split(" ", 2)
+    val topics = parts(0).split(",", -1).toSeq
+    if (topics.length < 2) (raw, 6.toByte, Seq("unknown"), raw)
+    else {
+      val code = model.severityTokens.toMap.get(topics(1))
+      (raw, code.getOrElse(6).toByte,
+        topics.head +: (topics.drop(2) ++ (if (code.isEmpty) Seq(topics(1)) else Nil)),
+        if (parts.length > 1) parts(1) else "")
+    }
+  }
+
+  test("compiled parse equals the plain-Scala reference on generated lines") {
+    val lines = samples(300)
+    val got = parse(lines)
+    assert(got.length === lines.length)
+    got.zip(lines.map(reference)).foreach { case (have, want) =>
+      assert(have === want, s"for raw line '${want._1}'")
+    }
+  }
 
   test("parser is total and severity always in [0,7]") {
     val rows = parse(samples(300))

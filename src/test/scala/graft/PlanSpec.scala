@@ -82,6 +82,23 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.toLowerCase.contains("batchevalpython") && !p.contains("ScalaUDF"), p)
   }
 
+  test("ingest projection: one native parse node, no CASE tree, small generated source") {
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    // an RDD scan, as a streaming batch plans: over a local relation the
+    // optimizer folds the projection away
+    val lines = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sources.Ingest.Schema)
+    val df = streaming.Pipeline.jdbcRows(lines)
+    val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+    val parses = exprs.flatMap(_.collect { case p: functions.SyslogParse => p })
+    assert(parses.size === 1, df.queryExecution.optimizedPlan)
+    assert(!exprs.exists(_.exists(_.isInstanceOf[CaseWhen])), df.queryExecution.optimizedPlan)
+    // the Column-tree parse generated ~91 000 chars here
+    val chars = org.apache.spark.sql.execution.debug
+      .codegenStringSeq(df.queryExecution.executedPlan).map(_._2.length).sum
+    assert(chars > 0 && chars < 20000, s"$chars chars of generated source")
+  }
+
   test("q_dedup_minhash candidate generation is an equi-join (no cartesian)") {
     val p = plan("q_dedup_minhash")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -1692,6 +1692,23 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("parseToLog and the JDBC sink row keep their column types and nullability") {
+    import org.apache.spark.sql.types._
+    // the JDBC sink derives NOT NULL columns from this schema, so a parse
+    // kernel's type drift must fail here rather than in a sink's DDL
+    val lines = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sources.Ingest.Schema)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType, f.nullable)).toSeq
+    val head = Seq(("timestamp", TimestampType, true), ("device", StringType, true),
+      ("severity", ByteType, false))
+    assert(shape(Pipeline.parseToLog(lines)) === head ++ Seq(
+      ("categories", ArrayType(StringType, containsNull = true), true),
+      ("message", StringType, true)))
+    assert(shape(Pipeline.jdbcRows(lines)) === head ++ Seq(
+      ("categories", StringType, true), ("message", StringType, true)))
+  }
+
   test("stream_sink_batched: JDBC sink round-trips into an embedded Derby table") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

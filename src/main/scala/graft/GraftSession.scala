@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a SparkSession configured the way every graft
-  * operator expects — UTC, AQE on, nanosecond-parquet compatibility, and a
+  * operator expects — UTC, AQE on, nanosecond-parquet compatibility,
+  * local streaming checkpoints written without Hadoop's fork-heavy
+  * `FileContext` ([[streaming.LocalFsCheckpointFileManager]]), and a
   * shuffle-partition count sized to the execution environment instead of
   * the 200 default.
   *
@@ -23,6 +25,8 @@ object GraftSession {
       // events-style feeds carry TIMESTAMP(NANOS) parquet, unreadable by
       // Spark natively; ingest as BIGINT ns (see util.events)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(streaming.LocalFsCheckpointFileManager.ConfKey,
+        classOf[streaming.LocalFsCheckpointFileManager].getName)
     val withMaster = master.fold(b)(b.master)
     if (shufflePartitions > 0)
       withMaster.config("spark.sql.shuffle.partitions", shufflePartitions)

@@ -1,7 +1,12 @@
 package graft.streaming
 
 import graft.model
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite, JdbcUtils}
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -182,10 +187,11 @@ object Pipeline {
 
   /** reference's actual sink: bulk INSERT into a JDBC table in 1000-row
     * statements (`lib/cacheManage.go:40-60` INSERT INTO mikrotik_logs;
-    * `batchsize` ≡ logCacheLimit). `categories` flattens to the raw
-    * comma-joined topic string (lopParse.go:31 splits on ","; JDBC rows
-    * have no array type). At-least-once: a batch replayed after a partial
-    * flush re-inserts — the reference instead DROPS a failed batch
+    * `batchsize` ≡ logCacheLimit), one Spark job per micro-batch through
+    * [[writeJdbcBatch]]. `categories` flattens to the raw comma-joined
+    * topic string (lopParse.go:31 splits on ","; JDBC rows have no array
+    * type). At-least-once: a batch replayed after a partial flush
+    * re-inserts — the reference instead DROPS a failed batch
     * (at-most-once); swap the URL for ClickHouse/postgres in production. */
   def startJdbc(lines: DataFrame, url: String, table: String,
       checkpointDir: String,
@@ -193,19 +199,55 @@ object Pipeline {
       connectionProperties: java.util.Properties = new java.util.Properties)
       : StreamingQuery =
     startJdbcWith(lines, checkpointDir, trigger) { (batch, _) =>
-      val props = new java.util.Properties()
-      props.putAll(connectionProperties)
-      props.put("batchsize", "1000")
-      batch.write.mode("append").jdbc(url, table, props)
+      writeJdbcBatch(batch, url, table, connectionProperties)
     }
+
+  /** Append `batch` to a JDBC table with what `batch.write.mode("append")
+    * .jdbc(url, table, props + batchsize=1000)` writes, in ONE Spark job
+    * and with no second query. The driver resolves the table as Spark's
+    * `JdbcRelationProvider` does in append mode (`tableExists`, then the
+    * table's schema or `createTable` from the batch schema, then the
+    * INSERT statement); each task hands its rows to Spark's own
+    * `JdbcUtils.savePartition`, so the setters, the 1000-row statement
+    * batches, the isolation level and the per-partition transaction are
+    * Spark's. What goes is the writer's per-batch fixed cost: the nested
+    * `SaveIntoDataSourceCommand` query with its plan string, the
+    * `Dataset.rdd` deserializer plan, the closure's ASM scan and the
+    * schema probe after the write. */
+  def writeJdbcBatch(batch: DataFrame, url: String, table: String,
+      connectionProperties: java.util.Properties = new java.util.Properties): Unit = {
+    import scala.jdk.CollectionConverters._
+    val options = new JdbcOptionsInWrite(url, table,
+      connectionProperties.asScala.toMap + ("batchsize" -> "1000"))
+    val schema = batch.schema
+    val caseSensitive = batch.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    val dialect = JdbcDialects.get(url)
+    val conn = dialect.createConnectionFactory(options)(-1)
+    val tableSchema =
+      try {
+        if (JdbcUtils.tableExists(conn, options)) JdbcUtils.getSchemaOption(conn, options)
+        else {
+          JdbcUtils.createTable(conn, options.table, schema, caseSensitive, options)
+          Some(schema)
+        }
+      } finally conn.close()
+    val insert = JdbcUtils.getInsertStatement(options.table, schema, tableSchema,
+      caseSensitive, dialect)
+    val scan = batch.queryExecution.toRdd
+    val rows = options.numPartitions.filter(_ < scan.getNumPartitions).fold(scan)(scan.coalesce(_))
+    batch.sparkSession.sparkContext.runJob(rows,
+      new JdbcPartitionWriter(options, schema, insert, dialect),
+      rows.partitions.indices, (_: Int, _: Unit) => ())
+  }
 
   /** the JDBC sinks' row: [[parseToLog]] with `categories` comma-joined */
   private[graft] def jdbcRows(lines: DataFrame): DataFrame =
     parseToLog(lines).withColumn("categories", array_join(col("categories"), ","))
 
   /** shared JDBC stream builder: ONE parse projection + categories
-    * flattening + writeStream scaffold for both delivery contracts — a
-    * future change to the projection cannot silently fork the
+    * flattening + writeStream scaffold for both delivery contracts, whose
+    * `write`s both land rows through [[writeJdbcBatch]] — a future change
+    * to the projection or the writer cannot silently fork the
     * at-least-once and exactly-once paths */
   private def startJdbcWith(lines: DataFrame, checkpointDir: String,
       trigger: Trigger)(write: (DataFrame, Long) => Unit): StreamingQuery = {
@@ -251,7 +293,7 @@ object Pipeline {
     // miss the column and silently disable the delete, observed as
     // duplicated replays); table names pass through unquoted on both
     // paths, so they fold consistently
-    val qcol = org.apache.spark.sql.jdbc.JdbcDialects.get(url).quoteIdentifier("batch_id")
+    val qcol = JdbcDialects.get(url).quoteIdentifier("batch_id")
     val conn = java.sql.DriverManager.getConnection(url, connectionProperties)
     try {
       val st = conn.createStatement()
@@ -265,11 +307,7 @@ object Pipeline {
         st.executeUpdate(s"DELETE FROM $table WHERE $qcol = $batchId"))
       finally st.close()
     } finally conn.close()
-    val props = new java.util.Properties()
-    props.putAll(connectionProperties)
-    props.put("batchsize", "1000")
-    batch.withColumn("batch_id", lit(batchId))
-      .write.mode("append").jdbc(url, table, props)
+    writeJdbcBatch(batch.withColumn("batch_id", lit(batchId)), url, table, connectionProperties)
   }
 
   /** [[startJdbc]] upgraded from at-least-once to EXACTLY-ONCE delivery:
@@ -1436,5 +1474,20 @@ object Pipeline {
           state.update(next)
           next
       }
+  }
+}
+
+/** The task side of [[Pipeline.writeJdbcBatch]]: converts the partition's
+  * Catalyst rows to `Row`s and hands them to Spark's own
+  * `JdbcUtils.savePartition`. A class rather than a lambda, passed
+  * straight to `SparkContext.runJob`, so Spark's closure cleaner finds no
+  * closure and reads no class file. */
+private[streaming] final class JdbcPartitionWriter(options: JdbcOptionsInWrite,
+    schema: StructType, insert: String, dialect: JdbcDialect)
+    extends ((TaskContext, Iterator[InternalRow]) => Unit) with Serializable {
+  def apply(ctx: TaskContext, rows: Iterator[InternalRow]): Unit = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    JdbcUtils.savePartition(options.table, rows.map(toRow(_).asInstanceOf[Row]), schema,
+      insert, options.batchSize, dialect, options.isolationLevel, options)
   }
 }

@@ -13,10 +13,16 @@ class ParserSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** parse through an RDD scan: over a local Seq the optimizer would
-    * fold the projection into the relation and only ever run `eval` */
+  /** `rows` as a DataFrame read through an RDD scan: over a local Seq the
+    * optimizer folds the projection into the relation
+    * (`ConvertToLocalRelation`), so only `eval` would ever run, never the
+    * generated code */
+  private def scanned[T: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](
+      rows: Seq[T], names: String*): org.apache.spark.sql.DataFrame =
+    spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF(names: _*)
+
   private def parse(lines: Seq[String]): Seq[(String, Byte, Seq[String], String)] =
-    spark.sparkContext.parallelize(lines, 2).toDF("raw")
+    scanned(lines, "raw")
       .select(col("raw"), model.parseSyslog(col("raw")).as("p"))
       .select("raw", "p.severity", "p.categories", "p.message")
       .as[(String, Byte, Seq[String], String)]
@@ -168,7 +174,7 @@ class ParserSpec extends AnyFunSuite {
   // ===== q_parse_rfc5424: real-syslog header decode =====================
 
   private def parseRfc(lines: Seq[String]): Seq[Row] =
-    lines.toDF("raw")
+    scanned(lines, "raw")
       .select(col("raw"), model.parseRfc(col("raw")).as("p"))
       .select("raw", "p.format", "p.facility", "p.severity", "p.version",
         "p.ts_text", "p.ts_us", "p.hostname", "p.appname", "p.procid",
@@ -264,14 +270,13 @@ class ParserSpec extends AnyFunSuite {
   }
 
   test("sd params: fixture shapes — multi-block, spaced values, bare/empty blocks, NIL") {
-    val rows = Seq(
+    val rows = scanned(Seq(
       // RFC 5424 §6.5 single and multi-block examples
       "[exampleSDID@32473 iut=\"3\" eventSource=\"Application\" eventID=\"1011\"]",
       "[exampleSDID@32473 iut=\"3\"][examplePriority@32473 class=\"high\"]",
       // value with spaces, empty value, param-less block, empty block
       "[meta@99 path=\"/var/log/app log\" note=\"\"][bare@1][]",
-      "-", null)
-      .toDF("sd")
+      "-", null), "sd")
       .select(model.parseSdParams(col("sd")).as("m"))
       .as[Option[Map[String, Map[String, String]]]]
       .collect().toSeq
@@ -301,7 +306,7 @@ class ParserSpec extends AnyFunSuite {
     val blobs = cases.map(_.map { case (id, ps) =>
       (Seq(id) ++ ps.map { case (k, v) => s"""$k="$v"""" }).mkString("[", " ", "]")
     }.mkString)
-    val got = blobs.toDF("sd")
+    val got = scanned(blobs, "sd")
       .select(model.parseSdParams(col("sd")).as("m"))
       .as[Map[String, Map[String, String]]]
       .collect().toSeq
@@ -321,7 +326,7 @@ class ParserSpec extends AnyFunSuite {
 
   test("sd params: §6.3.3 escapes — \\\" and \\] don't close value/block, \\\\ decodes, \\d passes through") {
     val blob = """[esc@9 path="C:\\logs\\app" msg="say \"hi\] now\" ok" re="\d+"]"""
-    val m = Seq(blob).toDF("sd")
+    val m = scanned(Seq(blob), "sd")
       .select(model.parseSdParams(col("sd")).as("m"))
       .as[Map[String, Map[String, String]]]
       .collect().head
@@ -330,7 +335,7 @@ class ParserSpec extends AnyFunSuite {
       "msg" -> """say "hi] now" ok""",
       "re" -> """\d+""")))
     // flat view decodes identically
-    val rows = model.sdParamRows(Seq((1, blob)).toDF("id", "sd"), "sd")
+    val rows = model.sdParamRows(scanned(Seq((1, blob)), "id", "sd"), "sd")
       .select("param", "value").as[(String, String)].collect().toMap
     assert(rows === Map("path" -> """C:\logs\app""",
       "msg" -> """say "hi] now" ok""", "re" -> """\d+"""))
@@ -342,7 +347,7 @@ class ParserSpec extends AnyFunSuite {
     val vals = (0 until 200).flatMap(i =>
       rawValGen.apply(Gen.Parameters.default, Seed(97L + i)))
     val blobs = vals.map(v => s"""[p@1 k="${sdEscape(v)}"]""")
-    val got = blobs.toDF("sd")
+    val got = scanned(blobs, "sd")
       .select(model.parseSdParams(col("sd")).as("m"))
       .as[Map[String, Map[String, String]]]
       .collect().toSeq
@@ -368,13 +373,13 @@ class ParserSpec extends AnyFunSuite {
 
   test("sd params: repeated PARAM-NAME (§6.3.2 origin example) — map keeps last, flat view keeps all") {
     val blob = """[origin ip="192.0.2.1" ip="192.0.2.129"][x@2 a="1"]"""
-    val m = Seq(blob).toDF("sd")
+    val m = scanned(Seq(blob), "sd")
       .select(model.parseSdParams(col("sd")).as("m"))
       .as[Map[String, Map[String, String]]]
       .collect().head
     assert(m === Map("origin" -> Map("ip" -> "192.0.2.129"),
       "x@2" -> Map("a" -> "1")))
-    val rows = model.sdParamRows(Seq((1, blob)).toDF("id", "sd"), "sd")
+    val rows = model.sdParamRows(scanned(Seq((1, blob)), "id", "sd"), "sd")
       .select("sd_id", "param", "value").as[(String, String, String)]
       .collect().toSeq.sorted
     assert(rows === Seq(("origin", "ip", "192.0.2.1"),

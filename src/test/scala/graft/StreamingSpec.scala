@@ -17,6 +17,12 @@ case class LogRow(device: String, severity: Byte)
 case class KafkaRecord(key: Array[Byte], value: Array[Byte], topic: String,
   partition: Int, offset: Long, timestamp: Timestamp, timestampType: Int)
 
+/** a local file system under its own `graftfake:` scheme: a non-`file:`
+  * checkpoint path that needs no server */
+class GraftFakeFs(uri: java.net.URI, conf: org.apache.hadoop.conf.Configuration)
+  extends org.apache.hadoop.fs.DelegateToFileSystem(uri,
+    new org.apache.hadoop.fs.RawLocalFileSystem, conf, "graftfake", false)
+
 /** SURVEY.md §2 B.9 stream_* rows: the e2e reference pipeline, watermark
   * late-data drop, stateful dedup, and running state — all on
   * MemoryStream (no wall clock, no network; FIXTURES.md §3). */
@@ -1732,6 +1738,143 @@ class StreamingSpec extends AnyFunSuite {
     val got = back.select("timestamp", "device", "severity", "categories", "message")
       .orderBy("timestamp", "device", "message").collect().toSeq
     assert(got.map(_.toSeq.map(String.valueOf)) === expected.map(_.toSeq.map(String.valueOf)))
+  }
+
+  private def fixtureLines: Seq[RawLine] =
+    model.syslogFixture.map { case (_, raw, dev, t) => RawLine(raw, dev, ts(t)) }
+
+  /** a JDBC table's rows as sorted strings, columns picked by name */
+  private def jdbcTable(url: String, table: String): Seq[String] =
+    spark.read.jdbc(url, table, new java.util.Properties)
+      .select("timestamp", "device", "severity", "categories", "message")
+      .collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+
+  test("writeJdbcBatch ≡ DataFrameWriter.jdbc: same DDL, same rows, appends by column name") {
+    import spark.implicits._
+    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    val url = "jdbc:derby:memory:graft_writer_eq;create=true"
+    val props = new java.util.Properties
+    val rows = Pipeline.jdbcRows(fixtureLines.toDF())
+    // fresh tables: each writer creates its own from the batch schema
+    rows.write.mode("append").jdbc(url, "by_spark", props)
+    Pipeline.writeJdbcBatch(rows, url, "by_graft", props)
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      def columns(table: String) = {
+        val rs = conn.getMetaData.getColumns(null, null, table, null)
+        Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getInt("ORDINAL_POSITION"),
+          r.getString("COLUMN_NAME"), r.getString("TYPE_NAME"), r.getInt("COLUMN_SIZE"),
+          r.getInt("NULLABLE"))).toList.sortBy(_._1)
+      }
+      assert(columns("BY_SPARK").map(_._2) ===
+        Seq("timestamp", "device", "severity", "categories", "message"))
+      assert(columns("BY_GRAFT") === columns("BY_SPARK"))
+      // pre-existing tables whose columns are in another order: both
+      // writers bind by name
+      val st = conn.createStatement()
+      try for (t <- Seq("reord_spark", "reord_graft"))
+        st.executeUpdate(s"""CREATE TABLE $t ("message" CLOB, "categories" CLOB,
+          "severity" SMALLINT NOT NULL, "device" CLOB, "timestamp" TIMESTAMP)""")
+      finally st.close()
+    } finally conn.close()
+    rows.write.mode("append").jdbc(url, "reord_spark", props)
+    Pipeline.writeJdbcBatch(rows, url, "reord_graft", props)
+    val bySpark = jdbcTable(url, "by_spark")
+    assert(bySpark.size === model.syslogFixture.size)
+    for (t <- Seq("by_graft", "reord_spark", "reord_graft"))
+      assert(jdbcTable(url, t) === bySpark, t)
+  }
+
+  test("startJdbc: each non-empty micro-batch runs one Spark job and no nested SQL execution") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    val url = "jdbc:derby:memory:graft_one_job;create=true"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val nested = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        if (p.getProperty("graft.test.drain") != null) drained.countDown()
+        else Option(p.getProperty("sql.streaming.queryId"))
+          .foreach(id => jobs.add(id -> p.getProperty("streaming.sql.batchId")))
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.rootExecutionId.exists(_ != x.executionId) =>
+          nested.incrementAndGet()
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val q = try {
+      val ms = MemoryStream[RawLine]
+      ms.addData(fixtureLines)
+      val q = Pipeline.startJdbc(ms.toDF(), url, "one_job", Files.createTempDirectory("graft_one_job").toString,
+        Trigger.AvailableNow())
+      q.awaitTermination(60000)
+      // the bus delivers in order: once this marker job is seen, every
+      // event the query posted has been seen too
+      sc.setLocalProperty("graft.test.drain", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.test.drain", null)
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      q
+    } finally sc.removeSparkListener(listener)
+    val nonEmpty = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId.toString).toSeq
+    assert(nonEmpty.nonEmpty)
+    val perBatch = jobs.toArray(Array.empty[(String, String)]).toSeq
+      .filter(_._1 == q.id.toString).groupBy(_._2).map { case (b, js) => b -> js.size }
+    assert(perBatch === nonEmpty.map(_ -> 1).toMap)
+    assert(nested.get === 0, "the JDBC write planned a second, nested SQL execution")
+  }
+
+  test("startJdbc resumes a file: checkpoint at the next batch id with no duplicate rows") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    val url = "jdbc:derby:memory:graft_resume;create=true"
+    val dir = Files.createTempDirectory("graft_resume_ckpt")
+    val ckpt = dir.toUri.toString
+    assert(ckpt.startsWith("file:"))
+    val (first, second) = fixtureLines.splitAt(fixtureLines.size / 2)
+    val ms = MemoryStream[RawLine]
+    def run(): Seq[Long] = {
+      val q = Pipeline.startJdbc(ms.toDF(), url, "resume_logs", ckpt, Trigger.AvailableNow())
+      q.awaitTermination(60000)
+      q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).toSeq
+    }
+    ms.addData(first)
+    val before = run()
+    ms.addData(second)
+    val after = run()
+    assert(before.nonEmpty && after === Seq(before.max + 1))
+    assert(Files.exists(dir.resolve(s"commits/${before.max + 1}")))
+    val expected = Pipeline.jdbcRows(fixtureLines.toDF())
+      .collect().map(_.toSeq.mkString("\u0001")).toSeq.sorted
+    assert(jdbcTable(url, "resume_logs") === expected)
+  }
+
+  test("checkpoint manager: file: paths get the FileSystem-based manager, other schemes Spark's default") {
+    import graft.streaming.LocalFsCheckpointFileManager
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing._
+    val key = LocalFsCheckpointFileManager.ConfKey
+    assert(spark.conf.get(key) === classOf[LocalFsCheckpointFileManager].getName)
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set(key, classOf[LocalFsCheckpointFileManager].getName)
+    conf.set("fs.AbstractFileSystem.graftfake.impl", classOf[GraftFakeFs].getName)
+    def delegate(path: String): Class[_] = CheckpointFileManager.create(new Path(path), conf) match {
+      case m: LocalFsCheckpointFileManager => m.delegate.getClass
+      case other => fail(s"Spark picked ${other.getClass} for $path")
+    }
+    val dir = Files.createTempDirectory("graft_cfm")
+    assert(delegate(dir.toUri.toString) === classOf[FileSystemBasedCheckpointFileManager])
+    // no scheme: resolved against fs.defaultFS, file: here
+    assert(delegate(dir.toString) === classOf[FileSystemBasedCheckpointFileManager])
+    // any other scheme: what Spark picks without the override
+    assert(delegate(s"graftfake://${dir}") === classOf[FileContextBasedCheckpointFileManager])
   }
 
   test("streamMediaFeatures: per-batch decode kernel reproduces the batch features") {

@@ -2,16 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** one shared local session for all suites (sbt forks a single test JVM) */
+/** one shared local session for all suites (sbt forks a single test JVM),
+  * in the library's own shape ([[GraftSession.builder]]) */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    val s = GraftSession.builder("graft-tests", Some("local[4]"), shufflePartitions = 4)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // fresh warehouse per JVM: saveAsTable would trip over files left by
       // a previous run (catalog is in-memory, the warehouse dir is not)
       .config("spark.sql.warehouse.dir",
